@@ -212,7 +212,7 @@ def warm_python_workers(spark, cpus: int) -> None:
 def run_flagship_once(cpus: int) -> dict:
     """Subprocess body for --scaling: flagship pipeline at one parallelism.
 
-    Two env knobs make the per-executor-resource emulation protocol
+    Env knobs make the per-executor-resource emulation protocol
     (--scaling-emulated) possible without a second code path:
 
     - ``SPARK_GRAFT_TASK_CPUS`` (default 1): sets ``spark.task.cpus``.
@@ -223,11 +223,6 @@ def run_flagship_once(cpus: int) -> dict:
       of the 64-on-32 oversubscription that local mode's 1-core tasks
       produce during Arrow stages (the r3-measured cause of the 8→32
       efficiency shortfall).
-    - ``SPARK_GRAFT_SCALE_ENGINE`` (default arrow): pins the extraction
-      engine so BOTH sides of a scaling pair run the identical job —
-      ``extract_points(engine='auto')`` would otherwise pick arrow at
-      local[8] and jvm at local[32], which is the right per-size choice
-      for a user but not a scaling measurement.
     """
     from osm_spark.session import get_spark
     from osm_spark.pipeline.geometry import synth_polygons
@@ -237,7 +232,6 @@ def run_flagship_once(cpus: int) -> dict:
     from osm_spark.pipeline.geometry import build_way_cells
 
     task_cpus = int(os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
-    engine = os.environ.get("SPARK_GRAFT_SCALE_ENGINE", "arrow")
     extra = {"spark.task.cpus": str(task_cpus)} if task_cpus > 1 else {}
     # SPARK_GRAFT_MEM_PER_CORE (GiB): hold memory-per-core constant
     # across the pair — a real N-executor cluster has 1/4 the TOTAL
@@ -266,22 +260,19 @@ def run_flagship_once(cpus: int) -> dict:
     walls = []
     for _ in range(SCALE_PASSES):
         t0 = time.monotonic()
-        force(pip_join(extract_points(pages, engine=engine), polygons,
+        force(pip_join(extract_points(pages), polygons,
                        way_cells, strategy="broadcast"))
         walls.append(round(time.monotonic() - t0, 3))
     wall = min(walls)
-    # Extraction-only walls isolate the sandbox's single-box Arrow pipe:
-    # every local worker shares one VM's serialization bandwidth, so this
-    # stage caps out regardless of worker count — on a real cluster each
-    # executor has its own local pipe and the stage scales by
-    # construction. Reported so the efficiency number can be decomposed.
+    # Extraction-only walls, reported so the efficiency number can be
+    # decomposed into the extract stage and everything downstream of it.
     ex_walls = []
     for _ in range(3):
         t0 = time.monotonic()
-        force(extract_points(pages, engine=engine))
+        force(extract_points(pages))
         ex_walls.append(round(time.monotonic() - t0, 3))
     spark.stop()
-    return {"cpus": cpus, "task_cpus": task_cpus, "engine": engine,
+    return {"cpus": cpus, "task_cpus": task_cpus,
             "pages": n, "wall_sec": wall, "all_walls": walls,
             "extract_wall_sec": min(ex_walls), "extract_walls": ex_walls,
             "pages_per_sec": round(n / wall, 1)}
@@ -781,15 +772,12 @@ def run_scaling() -> dict:
     lo, hi = out[f"local[{pair[0]}]"], out[f"local[{pair[1]}]"]
     ratio = pair[1] / pair[0]
     out["task_cpus"] = int(os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
-    out["engine"] = os.environ.get("SPARK_GRAFT_SCALE_ENGINE", "arrow")
     out["scaling_efficiency"] = round(
         (hi["pages_per_sec"] / lo["pages_per_sec"]) / ratio, 3
     )
-    # Decomposition: the Arrow extract stage shares ONE VM's
-    # serialization bandwidth across all local workers (a sandbox
-    # artifact — per-executor pipes scale on a real cluster), so its
-    # efficiency is reported separately, along with the efficiency of
-    # everything downstream of it (the engine's join/refine stages).
+    # Decomposition: the extract stage's efficiency is reported
+    # separately, along with the efficiency of everything downstream of
+    # it (the engine's join/refine stages).
     out["extract_stage_efficiency"] = round(
         (lo["extract_wall_sec"] / hi["extract_wall_sec"]) / ratio, 3
     )

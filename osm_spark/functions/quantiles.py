@@ -74,18 +74,3 @@ def integer_quantiles(
         out = q if out is None else out.unionByName(q)
     return out
 
-
-def robust_cut(
-    df: DataFrame, col: str, p_lo: float = 0.01, p_hi: float = 0.99
-) -> DataFrame:
-    """Rows whose integer ``col`` lies within the exact [q(p_lo),
-    q(p_hi)] band — the standard outlier trim, thresholds broadcast."""
-    qs = integer_quantiles(df, col, [p_lo, p_hi])
-    lo_pm, hi_pm = int(round(p_lo * 1000)), int(round(p_hi * 1000))
-    bounds = qs.groupBy().agg(
-        F.min(F.when(F.col("prob_pmille") == lo_pm, F.col("value"))).alias("lo"),
-        F.min(F.when(F.col("prob_pmille") == hi_pm, F.col("value"))).alias("hi"),
-    )
-    return df.crossJoin(F.broadcast(bounds)).where(
-        (F.col(col) >= F.col("lo")) & (F.col(col) <= F.col("hi"))
-    ).drop("lo", "hi")

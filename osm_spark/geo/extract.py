@@ -1,67 +1,19 @@
-"""Deterministic coordinate extraction from page text (Arrow UDF).
+"""Deterministic coordinate extraction grammar from page text.
 
 The grammar is pinned (SURVEY.md §2.10): a page's coordinate is the FIRST
 occurrence of ``geo:<lat>,<lon>`` with plain decimal degrees. Extraction is
 regex-only, no normalization — paired with the byte-identical ``text``
 invariant (BASELINE.json:15) this makes (url → lat, lon) reproducible
-bit-exactly across runs and engines.
+bit-exactly across runs.
 
-Vectorized via pandas ``str.extract`` (C regex engine over the whole batch,
-zero per-row Python).
+The Spark form is ``pipeline.spatial_join.extract_points`` (pure Column
+expressions, no Python worker); ``extract_coords_py`` is the pure-Python
+reference it is tested against.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
-
 COORD_REGEX = r"geo:(-?\d{1,2}\.\d{1,6}),(-?\d{1,3}\.\d{1,6})"
-
-_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
-)
-
-
-@F.pandas_udf(_SCHEMA)
-def extract_coords_udf(text: pd.Series) -> pd.DataFrame:
-    ext = text.str.extract(COORD_REGEX, expand=True)
-    lat = pd.to_numeric(ext[0], errors="coerce")
-    lon = pd.to_numeric(ext[1], errors="coerce")
-    # Reject out-of-domain coordinates rather than wrap them.
-    bad = (lat.abs() > 90) | (lon.abs() > 180)
-    lat[bad] = None
-    lon[bad] = None
-    return pd.DataFrame({"lat": lat, "lon": lon})
-
-
-def extract_coords_expr(text: Column | str) -> Column:
-    """Pure-Column variant of the same grammar: regexp_extract + try_cast.
-
-    Stays inside whole-stage codegen (no Arrow transfer) — the form used
-    on the 10^12-row hot path. regexp_extract returns '' on no-match and
-    try_cast('') yields NULL, matching the UDF's coerce semantics; the
-    string→double conversion is strtod in both engines, so values are
-    bit-identical to the pandas path (golden-tested).
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    # ONE regex pass (group 0); lat/lon then parse from the short match —
-    # two regexp_extract calls would re-scan the full text per group.
-    m = F.regexp_extract(c, COORD_REGEX, 0)
-    body = F.substring(m, 5, 64)  # strip the 'geo:' prefix
-    lat = F.nullif(F.substring_index(body, ",", 1), F.lit("")).try_cast("double")
-    lon = F.nullif(F.substring_index(body, ",", -1), F.lit("")).try_cast("double")
-    bad = (F.abs(lat) > 90.0) | (F.abs(lon) > 180.0)
-    return F.struct(
-        F.when(~bad, lat).alias("lat"),
-        F.when(~bad, lon).alias("lon"),
-    )
-
-
-def extract_coords(text: Column | str) -> Column:
-    """struct<lat:double, lon:double> from a text column (NULLs if absent)."""
-    return extract_coords_expr(text)
 
 
 def extract_coords_py(text: str) -> tuple[float | None, float | None]:

@@ -23,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType
 
 DEFAULT_RES = 9
 _OFF = np.int64(1) << 28
@@ -118,18 +118,6 @@ def hex_disk(cell: int, k: int) -> np.ndarray:
             out.append((q0 + dq, r0 + dr))
     arr = np.array(out, dtype=np.int64)
     return pack(arr[:, 0], arr[:, 1], res)
-
-
-def hex_disk_np(q: np.ndarray, r: np.ndarray, res: int, k: int):
-    """Vectorized disk: for n cells returns (n, m) neighbor grids, m=3k(k+1)+1."""
-    offs = []
-    for dq in range(-k, k + 1):
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
-            offs.append((dq, dr))
-    o = np.array(offs, dtype=np.int64)
-    qq = q[:, None] + o[None, :, 0]
-    rr = r[:, None] + o[None, :, 1]
-    return pack(qq, rr, res)
 
 
 def _point_seg_dist2(px, py, ax, ay, bx, by):
@@ -291,19 +279,6 @@ def hex_cell_udf(res: int = DEFAULT_RES):
 
 def hex_cell(lat: Column | str, lon: Column | str, res: int = DEFAULT_RES) -> Column:
     return hex_cell_expr(lat, lon, res)
-
-
-def hex_disk_udf(res: int = DEFAULT_RES, k: int = 1):
-    """pandas UDF (long cell) → array<long> of the k-disk around each cell."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        q, r, _ = unpack(c)
-        grid = hex_disk_np(q, r, res, k)
-        return pd.Series(list(grid))
-
-    return _udf
 
 
 def h3_available() -> bool:

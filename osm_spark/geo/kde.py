@@ -49,7 +49,6 @@ def kde_density(
     z: int,
     radius: int = 2,
     tile_size: int = 256,
-    prebin: bool = False,
 ) -> DataFrame:
     """(z, x, y, kde) — integer Epanechnikov KDE of ``points(lat, lon)``
     over zoom-``z`` tiles; bandwidth = ``radius`` tiles.
@@ -63,29 +62,12 @@ def kde_density(
         raise ValueError(f"radius must be >= 1, got {radius}")
 
     t = tile_pixel("lat", "lon", z, tile_size)
-    pos = points.select(t.alias("t")).select(
+    base = points.select(t.alias("t")).select(
         (F.col("t.x") * tile_size + F.col("t.px")).cast("long").alias("qx"),
         (F.col("t.y") * tile_size + F.col("t.py")).cast("long").alias("qy"),
         F.col("t.x").alias("cx"),
         F.col("t.y").alias("cy"),
     )
-    # ``prebin`` collapses coincident sub-cell positions to one row with
-    # a count BEFORE the kernel scatter (the weight depends only on
-    # (qx, qy)), bounding the explode by the OCCUPIED sub-cell space
-    # instead of the point count — the right trade when the duplication
-    # factor beats the extra exchange it costs.  Measured at 10M
-    # city-clustered pages / z12 (duplication ~2×): direct 12.4/4.1 s at
-    # 2/8 cores vs pre-binned 14.3/5.2 s — the extra shuffle LOSES at
-    # low duplication, so the default stays direct; flip it on for
-    # hotspot-dominated inputs (e.g. z ≤ 10, where a Zipf urban cell
-    # collapses millions of pages into thousands of sub-cells).
-    if prebin:
-        base = pos.groupBy("qx", "qy", "cx", "cy").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-    else:
-        base = pos.withColumn("cnt", F.lit(1).cast("long"))
-
     offs = F.array(
         *[
             F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -99,8 +81,8 @@ def kde_density(
     tx = (F.col("cx") + F.col("o.dx")).alias("x")
     ty = (F.col("cy") + F.col("o.dy")).alias("y")
     scattered = (
-        base.select("qx", "qy", "cnt", F.explode(offs).alias("o"), "cx", "cy")
-        .select("qx", "qy", "cnt", tx, ty)
+        base.select("qx", "qy", F.explode(offs).alias("o"), "cx", "cy")
+        .select("qx", "qy", tx, ty)
         .where(
             (F.col("x") >= 0) & (F.col("x") <= n_max)
             & (F.col("y") >= 0) & (F.col("y") <= n_max)
@@ -111,9 +93,9 @@ def kde_density(
     w = (F.lit(r2).cast("long") - (ddx * ddx + ddy * ddy)).alias("w")
 
     return (
-        scattered.select("x", "y", "cnt", w)
+        scattered.select("x", "y", w)
         .where(F.col("w") > 0)
         .groupBy("x", "y")
-        .agg(F.sum(F.col("w") * F.col("cnt")).cast("long").alias("kde"))
+        .agg(F.sum("w").alias("kde"))
         .select(F.lit(z).alias("z"), "x", "y", "kde")
     )

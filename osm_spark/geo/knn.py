@@ -84,11 +84,6 @@ def circum_m(res: int) -> float:
     return edge_deg(res) * DEG_M * 1.05
 
 
-def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("url").orderBy(F.col("dist_m").asc(), F.col("node_id").asc())
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def cell_candidates(
     pts: DataFrame, n: DataFrame, k: int, res: int
 ) -> DataFrame:
@@ -357,8 +352,8 @@ def knn_join(
         F.col("lon").alias("nlon"),
     )
     # pts is read twice (phase 1 cells, phase 2 probe) — recomputing the
-    # upstream UDF stage is cheaper than a DataFrame cache at high local
-    # thread counts (block-store write contention, measured 10×).
+    # upstream extraction stage is cheaper than a DataFrame cache at high
+    # local thread counts (block-store write contention, measured 10×).
     pts = points.select("url", "lat", "lon").withColumn(
         "pcell", hex_cell_expr("lat", "lon", res)
     )

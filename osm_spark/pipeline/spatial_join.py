@@ -4,16 +4,16 @@ Plan shape (SURVEY.md §2.10, informed by Raster Intervals SIGMOD'23's
 filter-then-refine decomposition):
 
 1. **extract**: pages.text → (lat, lon) via the pinned regex, encode to
-   hex cell (res 9) + S2 (level 13). One ArrowEvalPython pass by default,
-   or a zero-Python Generate-barrier form (``engine="jvm"``) — bit-exact
-   parity, see ``extract_points``.
+   hex cell (res 9) [+ S2 level 13]. Zero Python: Generate barriers pin
+   the regex and the parse to one evaluation per row, see
+   ``extract_points``.
 2. **prejoin**: equi join ``points.h3_9 == way_cells.cell``. The polygon
    covering is the *small* side — broadcast when under threshold, else a
    shuffle hash join with **explicit per-cell salting** for hot cells
    (north_rule requires explicit skew handling: AQE splits oversized
    shuffle blocks, but only salting spreads a single hot *key*).
-3. **refine**: exact ray-cast PIP in a vectorized mapInPandas over the
-   candidate pairs (grouped by way within each Arrow batch).
+3. **refine**: exact ray-cast PIP as a codegen Column expression over
+   the candidate pairs (``pip_cover_expr``).
 
 At the 10^12-row design point the pages side never shuffles in the
 broadcast path — the only wide exchange is the final aggregation, and
@@ -23,15 +23,11 @@ filter/projection pushdown reaches the parquet/Iceberg scan because steps
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo.extract import COORD_REGEX
-from osm_spark.geo.hexgrid import DEFAULT_RES, hex_cell_expr, points_in_polygon_np
+from osm_spark.geo.hexgrid import DEFAULT_RES, hex_cell_expr
 from osm_spark.geo.s2 import s2_cell_cols
 
 # Above this many covering cells we stop broadcasting and use the salted
@@ -42,130 +38,41 @@ BROADCAST_MAX_CELLS = 2_000_000
 # split into ceil(n/target) salt buckets.
 HOT_CELL_TARGET = 50_000
 
-# engine="auto" switches extraction to the zero-Python JVM form at or
-# above this defaultParallelism. Measured (BENCH.md finding #10): the
-# Arrow pipe saturates a single VM's serialization bandwidth well below
-# 16 concurrent workers (extract-stage scaling 0.33 vs the JVM form's
-# 0.76 at 10 M rows, jvm extract-only ~2× faster at local[32]); below
-# that the two engines are within host noise, so the oracle-gated Arrow
-# form stays the default. On a real cluster each executor has its own
-# worker pipes, so the threshold keys off defaultParallelism — the
-# per-JVM task-slot count in local mode, total cores on a cluster —
-# which is conservative there (per-executor parallelism is what
-# saturates; a cluster past 16 total cores still benefits from jvm's
-# zero serialization cost).
-JVM_ENGINE_MIN_PARALLELISM = 16
-
-
 def extract_points(
     pages: DataFrame,
     res: int = DEFAULT_RES,
     s2_level: int = 13,
     with_s2: bool = False,
-    engine: str = "auto",
 ) -> DataFrame:
     """pages → page_points(url, lat, lon, h3_9[, s2_13]); rows without a
     coordinate are dropped (they can never join).
 
-    Two engines, bit-identical output (parity-tested); the default
-    ``"auto"`` picks by ``defaultParallelism`` (>= ``JVM_ENGINE_MIN_
-    PARALLELISM`` → jvm): at high parallelism every Arrow worker shares
-    one VM's serialization bandwidth and the pipe saturates (BENCH.md
-    finding #10), while the JVM form costs nothing to scale.
-
-    - ``engine="arrow"`` (default): ONE vectorized Arrow UDF pass (pandas
-      str.extract, C regex). Besides being fast, the Python eval node is
-      a project-collapse barrier, so the downstream hex encode (pure
-      Column, codegen) reads plain lat/lon attributes instead of having
-      the regex tree inlined into every one of its ~8 references — the
-      expression blowup that made the naive all-Column form ~10× slower
-      end-to-end.
-    - ``engine="jvm"``: zero-Python form using ``explode(array(...))``
-      Generate barriers in place of the Arrow node. GenerateExec
-      materializes its generator output once per row, so CollapseProject
-      cannot clone the regex / parse / hex-encode subtrees into their
-      downstream references — the same once-per-row guarantee the Arrow
-      barrier gives, at zero serialization cost. Measured (BENCH.md
-      finding #10): full-PIP-pipeline parity with the Arrow engine at
-      every size/parallelism tried (within host noise), extract-only
-      ~2× faster at local[32] on pipe-floor-dominated inputs; kept
-      non-default because the Arrow form is the oracle-gated path, but
-      it is the form to prefer on real clusters where Python workers
-      are the scarce resource.
-
-    ``with_s2`` adds the S2 cell column; off by default so join paths
-    that key on h3 alone never pay for it.
-    """
-    if engine == "auto":
-        par = pages.sparkSession.sparkContext.defaultParallelism
-        engine = "jvm" if par >= JVM_ENGINE_MIN_PARALLELISM else "arrow"
-    if engine == "jvm":
-        return _extract_points_jvm(pages, res, s2_level, with_s2)
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'arrow', 'jvm' or 'auto', got {engine!r}")
-    # Extraction + row-drop run as ONE vectorized mapInPandas pass
-    # (pandas str.extract, C regex). The single Python node is a hard
-    # optimizer barrier in BOTH directions: an all-Column formulation was
-    # measured with CollapseProject/pushdown cloning the regex subtree
-    # into every downstream reference (~10 evals/row), and the earlier
-    # scalar-UDF + Spark-side notNull FILTER form was observed split by
-    # filter pushdown into TWO ArrowEvalPython nodes around an upstream
-    # exchange (the UDF evaluated once below for the filter, again above
-    # for the projection). Dropping non-matching rows INSIDE the pandas
-    # pass leaves Catalyst nothing to push, so the regex runs exactly
-    # once per row; downstream cell math is pure-Column codegen.
-    def _gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ext = pdf["text"].str.extract(COORD_REGEX, expand=True)
-            lat = pd.to_numeric(ext[0], errors="coerce")
-            lon = pd.to_numeric(ext[1], errors="coerce")
-            bad = (lat.abs() > 90) | (lon.abs() > 180)
-            lat[bad] = None
-            lon[bad] = None
-            keep = lat.notna() & lon.notna()
-            if keep.any():
-                yield pd.DataFrame(
-                    {"url": pdf["url"][keep], "lat": lat[keep], "lon": lon[keep]}
-                )
-
-    pts = pages.select("url", "text").mapInPandas(
-        _gen, "url string, lat double, lon double"
-    )
-    out = pts.select(
-        F.col("url"),
-        F.col("lat"),
-        F.col("lon"),
-        hex_cell_expr("lat", "lon", res).alias("h3_9"),
-    )
-    if with_s2:
-        # codegen chain (s2_cell_cols) — no second Arrow round trip
-        out = s2_cell_cols(out, level=s2_level, out="s2_13")
-    return out
-
-
-def _extract_points_jvm(
-    pages: DataFrame, res: int, s2_level: int, with_s2: bool
-) -> DataFrame:
-    """Zero-Python extraction via stacked Generate barriers.
-
-    Three barriers, each pinning one expensive subtree to exactly one
-    evaluation per row:
+    Zero-Python: two stacked ``explode(array(...))`` Generate barriers,
+    each pinning one expensive subtree to exactly one evaluation per row:
 
     1. the raw regex match (group 0) — one full-text regex scan;
     2. the parsed (lat, lon) struct — substring parse of the <=64-char
-       match, referenced dozens of times by the PIP refine lambdas;
-    3. the hex cell id — the ~40-op encode chain, referenced by the
-       prejoin hash on both candidate paths.
+       match, referenced dozens of times by the PIP refine lambdas.
 
-    Barrier 2/3 cost is negligible (the exploded arrays are 1-element and
-    the attributes are scalars); without them CollapseProject re-inlines
-    the subtree into every reference — the measured 3× regression of the
-    array-form kNN experiment (BENCH.md finding #8), JVM edition.
-    Semantics match the Arrow engine exactly: same COORD_REGEX first
-    match, same domain filter, strtod on both sides (parity-tested
-    bit-exact in tests/test_pipeline.py).
+    GenerateExec materializes its generator output once per row, so
+    CollapseProject cannot clone these subtrees into their downstream
+    references (the measured 3× regression of the array-form kNN
+    experiment, BENCH.md finding #8). The exploded arrays are 1-element
+    and the attributes scalars, so the barriers themselves cost nothing.
+
+    ``h3_9`` is a plain projection over the pinned lat/lon, not a third
+    barrier: Spark cannot prune a Generate, so a pinned cell id would be
+    encoded for every consumer, including those that never read it
+    (``knn_join``, ``tile_density``, ``density_raster`` and the adaptive
+    PIP, which encodes its own cells). As a projection it is pruned from
+    their plans.
+
+    Semantics are those of ``extract_coords_py``: first COORD_REGEX
+    match, |lat| <= 90 and |lon| <= 180, strtod parse (tested bit-exact
+    in tests/test_pipeline.py).
+
+    ``with_s2`` adds the S2 cell column; off by default so join paths
+    that key on h3 alone never pay for it.
     """
     m_rows = pages.select(
         "url",
@@ -186,11 +93,8 @@ def _extract_points_jvm(
         ).alias("c"),
     ).where((F.abs(F.col("c.lat")) <= 90.0) & (F.abs(F.col("c.lon")) <= 180.0))
     out = parsed.select(
-        "url",
-        F.col("c.lat").alias("lat"),
-        F.col("c.lon").alias("lon"),
-        F.explode(F.array(hex_cell_expr("c.lat", "c.lon", res))).alias("h3_9"),
-    )
+        "url", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon")
+    ).withColumn("h3_9", hex_cell_expr("lat", "lon", res))
     if with_s2:
         out = s2_cell_cols(out, level=s2_level, out="s2_13")
     return out
@@ -250,31 +154,6 @@ def _refine_pip_expr(candidates: DataFrame) -> DataFrame:
     return candidates.filter(keep).select("url", "way_id")
 
 
-def _refine_pip(candidates: DataFrame) -> DataFrame:
-    """Exact PIP over candidate (point, polygon) pairs.
-
-    Input columns: url, lat, lon, way_id, vlat, vlon. Vectorized per way
-    group inside each Arrow batch — no per-row Python.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lat = pdf["lat"].to_numpy(np.float64)
-            lon = pdf["lon"].to_numpy(np.float64)
-            for way_id, idx in pdf.groupby("way_id", sort=False).indices.items():
-                vlat = np.asarray(pdf["vlat"].iloc[idx[0]], dtype=np.float64)
-                vlon = np.asarray(pdf["vlon"].iloc[idx[0]], dtype=np.float64)
-                keep[idx] = points_in_polygon_np(lon[idx], lat[idx], vlon, vlat)
-            out = pdf.loc[keep, ["url", "way_id"]]
-            if len(out):
-                yield out
-
-    return candidates.mapInPandas(gen, "url string, way_id long")
-
-
 def pip_join_broadcast(
     points: DataFrame, polygons: DataFrame, way_cells: DataFrame
 ) -> DataFrame:
@@ -283,12 +162,12 @@ def pip_join_broadcast(
     Join covering cells (broadcast), then attach polygon vertices
     (broadcast), then exact refine. Output (url, way_id), distinct pairs.
 
-    No persist on points: the extraction Arrow UDF node is already a
-    project-collapse barrier (per-candidate re-evaluation cannot happen),
-    and DataFrame cache materialization measured 10× slower than the
-    recompute at local[32] (block-store write contention). On a cluster
-    the durable form of this barrier is the checkpointed page_points
-    stage (lineage.py).
+    No persist on points: the extraction's Generate barriers already pin
+    the regex and the parse to one evaluation per row (per-candidate
+    re-evaluation cannot happen), and DataFrame cache materialization
+    measured 10× slower than the recompute at local[32] (block-store
+    write contention). On a cluster the durable form of this barrier is
+    the checkpointed page_points stage (lineage.py).
     """
     cand = points.join(
         F.broadcast(way_cells), points["h3_9"] == way_cells["cell"], "inner"

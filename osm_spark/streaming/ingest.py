@@ -50,7 +50,6 @@ the None path for multi-batch growth).
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -240,38 +239,3 @@ def corpus_ingest_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def run_ingest_stream_batchlike(
-    spark: SparkSession,
-    docs_path: str,
-    corpus_path: str,
-    rules: DataFrame,
-    out_dir: str,
-    *,
-    max_files_per_trigger: int = 1,
-    transform=None,
-    **ingest_kw: Any,
-) -> DataFrame:
-    """availableNow bounded run of the streaming admission; returns the
-    accepted rows across all epochs as a DataFrame (epoch column
-    included). ``transform`` optionally maps the raw streaming frame
-    (e.g. the gated fixture's URL synthesis) before admission."""
-    stream = stream_docs(
-        spark, docs_path, max_files_per_trigger=max_files_per_trigger
-    )
-    if transform is not None:
-        stream = transform(stream)
-    # no driver-side mkdir: the epoch writes create the directories and
-    # every probe handles absence (local path or URI alike)
-    accepted_path = os.path.join(out_dir, "accepted")
-    q = corpus_ingest_stream(
-        stream,
-        corpus_path,
-        rules,
-        accepted_path,
-        os.path.join(out_dir, "ckpt"),
-        **ingest_kw,
-    )
-    q.awaitTermination()
-    return read_accepted(spark, accepted_path)

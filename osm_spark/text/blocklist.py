@@ -38,6 +38,8 @@ def blocklist_filter(
 
     ``patterns``: (pattern string, severity int) — a bounded curated dim
     (driver-collected; document the cardinality contract at call sites).
+    Patterns must be lowercase: the text is lowercased before matching,
+    so an uppercase pattern could never fire (raises ``ValueError``).
     ``hit_list`` is the comma-joined sorted set of matched patterns,
     ``max_severity`` the worst matched severity (0 when clean),
     ``keep`` true iff nothing matched.
@@ -48,6 +50,12 @@ def blocklist_filter(
     )
     if not rows:
         raise ValueError("blocklist_filter: empty pattern table")
+    upper = [r.pattern for r in rows if r.pattern != r.pattern.lower()]
+    if upper:
+        raise ValueError(
+            "blocklist_filter: patterns must be lowercase (text is matched "
+            f"lowercased, so these could never match): {upper}"
+        )
     arr = F.array(
         *[
             F.struct(

@@ -280,7 +280,6 @@ def jaccard_pairs(
     prune_margin: float = 0.3,
     prune_hash_chars: int = 8,
     pre_partitioned: bool = False,
-    exact_fast_path: bool = False,
 ) -> DataFrame:
     """Exact Jaccard refine over candidate pairs.
 
@@ -311,20 +310,6 @@ def jaccard_pairs(
     removes. Signature rows are ~num_hashes·33 B — an order of magnitude
     lighter than token arrays.
 
-    ``exact_fast_path`` (active only with ``signatures``) additionally
-    routes all-hashes-agree pairs through a 16-byte md5(text) equality
-    confirm instead of the token-array joins — exact-duplicate pairs
-    (the dominant candidate class on web corpora) emit jaccard=1.0
-    directly, bit-identical to what the refine would compute for them;
-    non-confirming pairs fall through to the refine unchanged (see the
-    inline note for the exactness argument). Default OFF: measured on
-    the sf0.1 gated corpus (short ~tens-of-tokens docs) the two extra
-    md5-dim joins cost MORE than the skipped array attaches save
-    (interleaved A/B in BENCH.md: min 7.2 s off vs 8.3 s on; a forked
-    union form measured worse still) — turn it on only for corpora of
-    long documents, where the 16-byte dim replaces multi-KB token
-    arrays on the dominant pair class.
-
     The prune compares digests truncated to ``prune_hash_chars`` hex
     chars (default 8 → 32 bits/hash): truncation can only make DISTINCT
     digests collide (p ≈ 2⁻³² per hash, slightly inflating the agreement
@@ -349,7 +334,6 @@ def jaccard_pairs(
     if not pre_partitioned:
         par = pairs.sparkSession.sparkContext.defaultParallelism * 2
         pairs = pairs.repartition(par, "doc_a", "doc_b")
-    fast: DataFrame | None = None
     if signatures is not None:
         if prune_hash_chars:
             signatures = signatures.select(
@@ -371,87 +355,21 @@ def jaccard_pairs(
             )
         )
         est = agree / F.size(F.col("_sig_a")).cast("double")
-        pruned = (
+        pairs = (
             pairs.join(sa, "doc_a")
             .join(sb, "doc_b")
             .filter(est >= F.lit(threshold - prune_margin))
-            .select(
-                "doc_a",
-                "doc_b",
-                (agree == F.size(F.col("_sig_a"))).alias("_all_agree"),
-            )
+            .select("doc_a", "doc_b")
         )
-        if exact_fast_path:
-            # Exact-duplicate fast path, LINEAR form: on web corpora most
-            # surviving candidates are TRUE duplicates (identical
-            # boilerplate pages), so the prune can't drop them and the
-            # token-array joins do their full O(|doc|) set math per pair
-            # only to compute 1.0. Pairs whose signatures agree on ALL
-            # hashes are near-certain exact dups — confirm with a
-            # 16-byte md5(text) equi-check (identical text ⇒ identical
-            # shingle set ⇒ Jaccard exactly 1.0 = round(n/n, 6),
-            # bit-identical to the refine's output). The flag stays a
-            # COLUMN on the one pair pipeline (a fork-and-union form was
-            # measured slower — the pruned subtree evaluated once per
-            # branch): confirmed-exact rows null their token-join keys
-            # (they fall out of the left joins, so the arrays never
-            # attach to the dominant pair class) and emit 1.0 via
-            # when(); all-agree pairs whose md5 differs, and pairs with
-            # an empty shingle set (the refine's 0/0 → NaN drops them,
-            # and identical empties must drop too — the _ne guard),
-            # take the exact refine unchanged. Output is hash-identical
-            # to the fast-path-off plan (tested; A/B in BENCH.md).
-            hd = docs.select(
-                F.col(id_col).alias("doc_id"),
-                F.md5(F.col(text_col)).alias("_h"),
-                (F.size(sh) > 0).alias("_ne"),
-            )
-            ha = hd.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("_h").alias("_h_a"),
-                F.col("_ne").alias("_ne_a"),
-            )
-            hb = hd.select(
-                F.col("doc_id").alias("doc_b"), F.col("_h").alias("_h_b")
-            )
-            pairs = (
-                pruned.join(ha, "doc_a")
-                .join(hb, "doc_b")
-                .select(
-                    "doc_a",
-                    "doc_b",
-                    (
-                        F.col("_all_agree")
-                        & (F.col("_h_a") == F.col("_h_b"))
-                        & F.col("_ne_a")
-                    ).alias("_exact"),
-                )
-            )
-        else:
-            pairs = pruned.select(
-                "doc_a", "doc_b", F.lit(False).alias("_exact")
-            )
-    else:
-        pairs = pairs.withColumn("_exact", F.lit(False))
     ts = docs.select(F.col(id_col).alias("doc_id"), sh.alias("toks"))
-    ta = ts.select(F.col("doc_id").alias("_ta_id"), F.col("toks").alias("toks_a"))
-    tb = ts.select(F.col("doc_id").alias("_tb_id"), F.col("toks").alias("toks_b"))
-    # exact rows null their join keys: the left joins pass them through
-    # without attaching token arrays (no probe, no array copy)
-    ja = F.when(~F.col("_exact"), F.col("doc_a"))
-    jb = F.when(~F.col("_exact"), F.col("doc_b"))
+    ta = ts.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
+    tb = ts.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     n_inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
     denom = (F.size(F.col("toks_a")) + F.size(F.col("toks_b")) - n_inter).cast("double")
     return (
-        pairs.join(ta, ja == F.col("_ta_id"), "left")
-        .join(tb, jb == F.col("_tb_id"), "left")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.when(F.col("_exact"), F.lit(1.0))
-            .otherwise(F.round(n_inter / denom, 6))
-            .alias("jaccard"),
-        )
+        pairs.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .select("doc_a", "doc_b", F.round(n_inter / denom, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

@@ -61,16 +61,16 @@ def truncation_recall(
 ) -> DataFrame:
     """(query_id, n_overlap, recall_micro) — top-k overlap between the
     full-dimension exact ranking and the first-``dims_kept``-dimensions
-    ranking.  ``queries``: (query_id, embedding); ``corpus``:
-    (vec_id, embedding)."""
+    ranking.  ``queries``: (query_id, ``vec_col``); ``corpus``:
+    (vec_id, ``vec_col``)."""
     if dims_kept < 1:
         raise ValueError(f"dims_kept must be >= 1, got {dims_kept}")
-    full = cosine_topk(queries, corpus, k=k)
+    full = cosine_topk(queries, corpus, k=k, vec_col=vec_col)
     tq = queries.select(
         "query_id", F.slice(F.col(vec_col), 1, dims_kept).alias(vec_col)
     )
     tc = corpus.select(
         "vec_id", F.slice(F.col(vec_col), 1, dims_kept).alias(vec_col)
     )
-    trunc = cosine_topk(tq, tc, k=k)
+    trunc = cosine_topk(tq, tc, k=k, vec_col=vec_col)
     return ranking_overlap(full, trunc, k)

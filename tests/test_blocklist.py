@@ -47,3 +47,11 @@ def test_blocklist_empty_patterns_raises(spark, dfs):
     empty = spark.createDataFrame([], "pattern string, severity int")
     with pytest.raises(ValueError):
         blocklist_filter(docs, empty)
+
+
+def test_blocklist_uppercase_pattern_raises(spark, dfs):
+    # text is matched lowercased: an uppercase pattern would never fire
+    docs, _ = dfs
+    pats = spark.createDataFrame([("Bad Phrase", 3)], "pattern string, severity int")
+    with pytest.raises(ValueError, match="lowercase"):
+        blocklist_filter(docs, pats)

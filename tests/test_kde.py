@@ -83,10 +83,3 @@ def test_kde_radius_validation(spark):
     with pytest.raises(ValueError):
         kde_density(df, Z, radius=0)
 
-
-def test_kde_prebin_identical(spark, pts):
-    df = spark.createDataFrame(pts + pts, "lat double, lon double")  # real dups
-    direct = {(r.x, r.y): r.kde for r in kde_density(df, Z, radius=R).collect()}
-    binned = {(r.x, r.y): r.kde
-              for r in kde_density(df, Z, radius=R, prebin=True).collect()}
-    assert direct == binned

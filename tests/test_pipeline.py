@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from osm_spark.functions import strip_html
 from osm_spark.geo.extract import extract_coords_py
 from osm_spark.geo.hexgrid import hex_cell_np, points_in_polygon_np
+from osm_spark.geo.s2 import s2_cell_np
 from osm_spark.geo.tiles import tile_xy, tile_xy_py
 from osm_spark.pipeline.geometry import build_way_cells, synth_polygons, synth_polygons_pdf
 from osm_spark.pipeline.pages import synth_pages
@@ -64,6 +65,9 @@ def test_text_byte_identical_invariant(pages):
 
 
 def test_extraction_matches_python_oracle(pages, points):
+    """Every output column against its reference: (lat, lon) against the
+    pure-Python grammar, ``h3_9`` against ``hex_cell_np`` and ``s2_13``
+    against ``s2_cell_np``, bit-exact."""
     got = {r.url: (r.lat, r.lon) for r in points.collect()}
     for row in pages.select("url", "text").collect():
         lat, lon = extract_coords_py(row.text)
@@ -74,24 +78,14 @@ def test_extraction_matches_python_oracle(pages, points):
     # ~60% of pages carry a coordinate.
     assert 0.5 < len(got) / 500 < 0.7
 
-
-def test_jvm_extract_engine_bit_exact_parity(pages, points):
-    """engine='jvm' (Generate-barrier, zero Python) must match the Arrow
-    engine bit-for-bit: same rows, same doubles (strtod both sides),
-    same hex cell ids. BENCH.md finding #10."""
-    jvm = extract_points(pages, engine="jvm")
-    assert jvm.columns == points.columns
-    a = sorted(map(tuple, points.collect()))
-    j = sorted(map(tuple, jvm.collect()))
-    assert a == j
-
-
-def test_jvm_extract_engine_with_s2_and_bad_engine(spark, pages):
-    jvm = extract_points(pages, with_s2=True, engine="jvm")
-    arrow = extract_points(pages, with_s2=True, engine="arrow")
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, arrow.collect()))
-    with pytest.raises(ValueError, match="engine"):
-        extract_points(pages, engine="pandas")
+    rows = extract_points(pages, with_s2=True).collect()
+    assert sorted((r.url, r.lat, r.lon) for r in rows) == sorted(
+        (u, la, lo) for u, (la, lo) in got.items()
+    )
+    lat = np.array([r.lat for r in rows])
+    lon = np.array([r.lon for r in rows])
+    assert [r.h3_9 for r in rows] == hex_cell_np(lat, lon, 9).tolist()
+    assert [r.s2_13 for r in rows] == s2_cell_np(lat, lon, 13).tolist()
 
 
 def oracle_pip(points_rows, polys_pdf):

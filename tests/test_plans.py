@@ -14,6 +14,20 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+# the res-9 hex encode, recognised by its constant-folded res tag (9 << 58)
+_ENC9 = str(9 << 58)
+
+
+def _uncached_pages(spark, sf_dir):
+    """Pages whose plan no test module caches. Several modules cache
+    ``extract_points(synth_pages(spark, sf_dir))``; a plan over that
+    frame prints the cached plan, not the one under test."""
+    from osm_spark.pipeline.pages import synth_pages
+
+    return synth_pages(spark, sf_dir, multiplier=2)
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_med_dir):
     import __spark_entry__ as entry
 
@@ -37,7 +51,8 @@ def test_column_pruning_reaches_parquet_scan(spark, sf_med_dir):
 
 def test_pip_broadcast_path_never_shuffles_points(spark, sf_small_dir):
     """The 10^12-row side must reach the refine without an exchange:
-    scan → Arrow extract → codegen cell math → two broadcast hash joins
+    scan → Generate-barrier extract → codegen cell math → two broadcast
+    hash joins
     → codegen refine. Any hashpartitioning exchange in this plan means
     the pages side started shuffling."""
     from osm_spark.pipeline.geometry import build_way_cells, synth_polygons
@@ -54,20 +69,18 @@ def test_pip_broadcast_path_never_shuffles_points(spark, sf_small_dir):
 
 
 def test_jvm_extract_is_zero_python_and_barriers_hold(spark, sf_small_dir):
-    """engine='jvm' must plan with no Python eval node at all, keep the
-    Generate barriers (so the regex/parse/hex subtrees evaluate once per
-    row instead of being CollapseProject-cloned into every reference),
-    and still feed the broadcast PIP path without shuffling pages."""
+    """Extraction must plan with no Python eval node at all, keep the two
+    Generate barriers (so the regex and the parse evaluate once per row
+    instead of being CollapseProject-cloned into every reference), and
+    still feed the broadcast PIP path without shuffling pages."""
     from osm_spark.pipeline.geometry import build_way_cells, synth_polygons
-    from osm_spark.pipeline.pages import synth_pages
     from osm_spark.pipeline.spatial_join import extract_points, pip_join_broadcast
 
-    pages = synth_pages(spark, sf_small_dir)
-    pts = extract_points(pages, engine="jvm")
+    pts = extract_points(_uncached_pages(spark, sf_small_dir))
     plan = _plan(pts)
-    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+    for node in _PYTHON_NODES:
         assert node not in plan
-    assert plan.count("Generate explode") == 3
+    assert plan.count("Generate explode") == 2
     # exactly one full-text regex eval in the whole plan
     assert plan.count("regexp_extract") == 1
 
@@ -81,6 +94,50 @@ def test_jvm_extract_is_zero_python_and_barriers_hold(spark, sf_small_dir):
     for node in ("ArrowEvalPython", "BatchEvalPython"):
         assert node not in jplan
     assert jplan.count("MapInPandas") == 1
+
+
+def test_extract_h3_is_pruned_where_unread(spark, sf_small_dir):
+    """``h3_9`` is a projection, not a Generate-pinned column: consumers
+    that never read it (kNN at its own res 8, tiles, rasters) carry no
+    res-9 encode, and the PIP paths that do read it carry it no more
+    often than the earlier Arrow-extract plans did (2 / 10 / 1 / 5)."""
+    from osm_spark.geo.contours import density_raster, tile_density
+    from osm_spark.geo.knn import knn_join
+    from osm_spark.pipeline.geometry import (
+        build_way_cells,
+        build_way_cells_adaptive,
+        synth_nodes,
+        synth_polygons,
+    )
+    from osm_spark.pipeline.spatial_join import (
+        extract_points,
+        pip_join_adaptive,
+        pip_join_broadcast,
+        pip_join_salted,
+        salt_plan,
+    )
+
+    pts = extract_points(_uncached_pages(spark, sf_small_dir))
+    for df in (
+        tile_density(pts, 12),
+        density_raster(pts, 12),
+        knn_join(pts, synth_nodes(spark), 3),
+    ):
+        plan = _plan(df)
+        assert _ENC9 not in plan, plan
+        for node in _PYTHON_NODES:
+            assert node not in plan
+
+    polygons = synth_polygons(spark)
+    cells = build_way_cells(polygons)
+    adaptive = build_way_cells_adaptive(polygons)
+    for df, most in (
+        (pip_join_broadcast(pts, polygons, cells), 2),
+        (pip_join_salted(pts, polygons, cells, salt_plan(pts, target=20)), 10),
+        (pip_join_adaptive(pts, polygons, adaptive, "broadcast", [7, 8, 9]), 1),
+        (pip_join_adaptive(pts, polygons, adaptive, "salted", [7, 8, 9]), 5),
+    ):
+        assert _plan(df).count(_ENC9) <= most
 
 
 def test_pip_salted_path_never_broadcasts_vertex_dim(spark, sf_small_dir):
@@ -276,28 +333,6 @@ def test_components_round_hash_joins_without_sorting(spark):
     assert "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_extract_engine_auto_picks_by_parallelism(spark, sf_small_dir):
-    """engine='auto' resolves to the Arrow form below the measured pipe
-    saturation point and the zero-Python JVM form at/above it; both are
-    bit-exact (parity test in test_pipeline), so only the plan differs."""
-    from osm_spark.pipeline.pages import synth_pages
-    from osm_spark.pipeline.spatial_join import (
-        JVM_ENGINE_MIN_PARALLELISM,
-        extract_points,
-    )
-
-    pages = synth_pages(spark, sf_small_dir)
-    par = spark.sparkContext.defaultParallelism
-    plan = _plan(extract_points(pages, engine="auto"))
-    if par >= JVM_ENGINE_MIN_PARALLELISM:
-        assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
-    else:
-        assert "MapInPandas" in plan
-    # explicit engines still obey the request regardless of parallelism
-    assert "MapInPandas" in _plan(extract_points(pages, engine="arrow"))
-    assert "MapInPandas" not in _plan(extract_points(pages, engine="jvm"))
 
 
 def test_dbscan_pair_join_is_cell_keyed_hash_join(spark, sf_small_dir):

@@ -259,6 +259,21 @@ def test_jaccard_signature_prune_identical_results(docs, pydocs):
     )
     assert full_digest == unpruned
 
+    # identical SHORT docs whose 3-gram shingle set is empty: the
+    # pruned refine must drop the pair
+    spark = docs.sparkSession
+    shorts = spark.createDataFrame(
+        [(1, "tiny doc"), (2, "tiny doc"), (3, "other text")],
+        "doc_id long, text string",
+    )
+    sh = word_ngrams("text", 3)
+    ssigs = minhash_array(shorts, 32, shingle=sh)
+    spairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    got = jaccard_pairs(
+        shorts, spairs, threshold=0.8, shingle=sh, signatures=ssigs
+    ).collect()
+    assert got == []
+
 
 def test_jaccard_pre_partitioned_single_exchange(docs):
     """lsh_candidate_pairs(num_partitions) + pre_partitioned=True must
@@ -276,17 +291,12 @@ def test_jaccard_pre_partitioned_single_exchange(docs):
         ).collect()
     )
     par = docs.sparkSession.sparkContext.defaultParallelism * 2
-    # exact_fast_path off: the fast path forks the pruned pair list into
-    # two branches whose union legitimately prints the (reused) pair
-    # exchange more than once — the single-exchange property under test
-    # is about the linear refine shape.
     fused_df = jaccard_pairs(
         docs,
         lsh_candidate_pairs(bands, num_partitions=par),
         threshold=0.8,
         signatures=sigs,
         pre_partitioned=True,
-        exact_fast_path=False,
     )
     # plan: exactly one hashpartitioning exchange on (doc_a, doc_b) —
     # the fused dedup/width shuffle; the default shape carries two.
@@ -366,55 +376,6 @@ def test_decontaminate_short_doc_and_plan(spark, docs):
     )
     assert "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
-
-
-def test_jaccard_exact_fast_path_identical_results(docs, pydocs):
-    """The exact-duplicate fast path (all-signature-agreement + md5
-    confirm routed around the token joins) must be output-identical to
-    the plain refine — including edge cases: near-dups below 1.0, exact
-    dups (1.0), and identical SHORT docs whose n-gram shingle set is
-    empty (the refine's 0/0 → NaN drops them; the fast path must too)."""
-    from osm_spark.text.dedup import (
-        lsh_bands_from_array,
-        lsh_candidate_pairs,
-        minhash_array,
-        word_ngrams,
-    )
-
-    sigs = minhash_array(docs, 32)
-    pairs = lsh_candidate_pairs(lsh_bands_from_array(sigs, 4, 32))
-    off = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(
-            docs, pairs, threshold=0.8, signatures=sigs, exact_fast_path=False
-        ).collect()
-    )
-    on = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(
-            docs, pairs, threshold=0.8, signatures=sigs, exact_fast_path=True
-        ).collect()
-    )
-    assert on == off
-    # the corpus genuinely contains exact dups, so the fast path fired
-    assert any(j == 1.0 for *_, j in on)
-
-    # short identical docs under 3-gram shingles: empty shingle sets →
-    # the refine yields NaN and drops the pair; fast path must agree
-    spark = docs.sparkSession
-    shorts = spark.createDataFrame(
-        [(1, "tiny doc"), (2, "tiny doc"), (3, "other text")],
-        "doc_id long, text string",
-    )
-    sh = word_ngrams("text", 3)
-    ssigs = minhash_array(shorts, 32, shingle=sh)
-    spairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    for fast in (False, True):
-        got = jaccard_pairs(
-            shorts, spairs, threshold=0.8, shingle=sh,
-            signatures=ssigs, exact_fast_path=fast,
-        ).collect()
-        assert got == [], f"exact_fast_path={fast} must drop empty-shingle pairs"
 
 
 def test_incremental_near_dups_matches_full_pipeline(docs):

@@ -77,3 +77,18 @@ def test_truncation_validation(spark, emb):
     q = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
     with pytest.raises(ValueError):
         truncation_recall(q, emb, dims_kept=0)
+
+
+def test_truncation_recall_honours_vec_col(spark, emb):
+    q = emb.filter(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    want = sorted(map(tuple, truncation_recall(q, emb, k=K, dims_kept=DK).collect()))
+    got = truncation_recall(
+        q.withColumnRenamed("embedding", "vec"),
+        emb.withColumnRenamed("embedding", "vec"),
+        k=K,
+        dims_kept=DK,
+        vec_col="vec",
+    ).collect()
+    assert sorted(map(tuple, got)) == want

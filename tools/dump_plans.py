@@ -56,20 +56,12 @@ def main() -> None:
     sections = [
         (
             "PIP join — broadcast prejoin path",
-            "The 10^12-row pages side: scan → one Arrow extract pass → codegen "
-            "cell math → two BroadcastHashJoins → codegen ray-cast refine. "
-            "No hashpartitioning exchange anywhere on the points branch.",
+            "The 10^12-row pages side: scan → zero-Python extraction (two "
+            "explode(array(...)) Generate barriers pin the regex and the "
+            "parse to one eval per row) → codegen cell math → two "
+            "BroadcastHashJoins → codegen ray-cast refine. No Python node "
+            "and no hashpartitioning exchange anywhere on the points branch.",
             pip_join_broadcast(points, polygons, cells),
-        ),
-        (
-            "PIP join — zero-Python extraction engine (engine='jvm')",
-            "Same pipeline with the Generate-barrier extraction: three "
-            "explode(array(...)) barriers pin regex/parse/hex to one eval "
-            "per row with NO Python node anywhere — bit-exact with the "
-            "Arrow engine (BENCH.md finding #10).",
-            pip_join_broadcast(
-                extract_points(pages, engine="jvm"), polygons, cells
-            ),
         ),
         (
             "PIP join — salted shuffle path",
