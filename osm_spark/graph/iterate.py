@@ -35,6 +35,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
@@ -59,7 +60,8 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
     """
     path = f"{_base_dir(df).rstrip('/')}/t-{uuid.uuid4().hex}"
     df.write.parquet(path)
-    out = df.sparkSession.read.parquet(path)
+    # The schema just written: no footer-inference job on the re-read.
+    out = df.sparkSession.read.schema(df.schema).parquet(path)
     out._trunc_path = path  # type: ignore[attr-defined]
     return out
 
@@ -67,10 +69,13 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
 def drop_truncated(df: DataFrame) -> None:
     """Delete the parquet files behind a ``truncate_lineage`` result.
 
-    Only local paths are removed (a cluster checkpoint dir on shared
+    Only local paths are removed, given as a path or a ``file:`` URI
+    (``getCheckpointDir`` returns one); a cluster checkpoint dir on shared
     storage follows the cluster's own retention policy, like Spark's
-    reliable checkpoints). No-op for non-truncated frames.
+    reliable checkpoints. No-op for non-truncated frames.
     """
     path = getattr(df, "_trunc_path", None)
+    if path and path.startswith("file:"):
+        path = urlparse(path).path
     if path and path.startswith("/") and os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)

@@ -3,13 +3,24 @@
 north_rule: "every stage checkpoints per-partition lineage and row-count
 metrics ... so any run is resumable mid-job". Implementation:
 
-- Each stage writes its output to ``{base}/stages/{name}`` (parquet here;
-  on a cluster the same calls target Iceberg tables — the writer API is the
-  only difference, isolated in ``_write``).
+- Each stage writes its output to ``{base}/stages/{name}`` with Spark's
+  parquet writer (``table_prefix`` mode: a catalog table
+  ``{prefix}_{name}`` via ``saveAsTable``; with an Iceberg catalog the same
+  call lands in Iceberg). A fresh stage is re-read with the schema it was
+  just written with, so the re-read launches no footer-inference job.
 - After a successful write, per-FILE row counts are read from the parquet
   footers (metadata only, no data scan — the analog of Iceberg's manifest
-  row counts) and appended to ``{base}/lineage`` together with stage name,
-  run id, input row estimate and wall time.
+  row counts) and appended to the lineage log together with stage name,
+  run id and wall time.
+- The lineage log is a handful of driver-local rows per stage. In
+  ``base_dir`` mode, which is already driver-local (``stage_done`` checks
+  ``_SUCCESS`` with ``os.path``, footers are read with pyarrow), the rows
+  go to ``{base}/lineage`` as one pyarrow-written
+  ``part-<uuid>.parquet`` per append: a Spark append would cost a 4-task
+  job per stage on fresh AND resumed runs. The file is written under a
+  ``_``-prefixed name and renamed into place, so a Spark reader never
+  sees a partial file. ``table_prefix`` mode appends with ``saveAsTable``
+  so the catalog owns the table. ``lineage()`` reads both with Spark.
 - Resume: a stage whose output already exists (``_SUCCESS`` marker) is
   skipped and its DataFrame re-read from the checkpoint, so a killed job
   restarts mid-pipeline paying only for unfinished stages.
@@ -24,6 +35,15 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+_LINEAGE_COLUMNS = (
+    ("run_id", "string"),
+    ("stage", "string"),
+    ("partition_file", "string"),
+    ("output_rows", "long"),
+    ("wall_ms", "long"),
+    ("skipped", "boolean"),
+)
 
 
 @dataclass
@@ -84,10 +104,11 @@ class LineageLog:
             return self.spark.catalog.tableExists(self._stage_table(name))
         return os.path.exists(os.path.join(self._stage_path(name), "_SUCCESS"))
 
-    def _read_stage(self, name: str) -> DataFrame:
+    def _read_stage(self, name: str, schema=None) -> DataFrame:
         if self.table_prefix is not None:
             return self.spark.table(self._stage_table(name))
-        return self.spark.read.parquet(self._stage_path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._stage_path(name))
 
     def run_stage(
         self, name: str, build: Callable[[], DataFrame], repartition: int | None = None
@@ -108,7 +129,7 @@ class LineageLog:
             df.write.mode("overwrite").parquet(self._stage_path(name))
         wall_ms = int((time.monotonic() - t0) * 1000)
         rows = self._append_lineage(name, skipped=False, wall_ms=wall_ms)
-        return StageResult(name, self._read_stage(name), False, wall_ms, rows)
+        return StageResult(name, self._read_stage(name, df.schema), False, wall_ms, rows)
 
     def _append_lineage(self, name: str, skipped: bool, wall_ms: int) -> int:
         if skipped:
@@ -124,16 +145,28 @@ class LineageLog:
             (self.run_id, name, f, int(r), int(wall_ms), bool(skipped))
             for f, r in metrics
         ] or [(self.run_id, name, None, 0, int(wall_ms), bool(skipped))]
-        log = self.spark.createDataFrame(
-            rows,
-            "run_id string, stage string, partition_file string, "
-            "output_rows long, wall_ms long, skipped boolean",
-        )
         if self.table_prefix is not None:
+            schema = ", ".join(f"{c} {t}" for c, t in _LINEAGE_COLUMNS)
+            log = self.spark.createDataFrame(rows, schema)
             log.write.mode("append").saveAsTable(f"{self.table_prefix}_lineage")
         else:
-            log.write.mode("append").parquet(self._lineage_path())
+            self._append_lineage_file(rows)
         return total
+
+    def _append_lineage_file(self, rows: list[tuple]) -> None:
+        """One pyarrow part file per append, renamed into place."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        arrow_type = {"string": pa.string(), "long": pa.int64(), "boolean": pa.bool_()}
+        schema = pa.schema([(c, arrow_type[t]) for c, t in _LINEAGE_COLUMNS])
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+        path = self._lineage_path()
+        os.makedirs(path, exist_ok=True)
+        part = uuid.uuid4().hex
+        tmp = os.path.join(path, f"_tmp-{part}.parquet")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, f"part-{part}.parquet"))
 
     def _table_file_metrics(self, table: str) -> list[tuple[str, int]]:
         import pyarrow.parquet as pq

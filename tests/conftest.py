@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -32,3 +33,22 @@ def sf_small_dir():
 @pytest.fixture(scope="session")
 def sf_med_dir():
     return SF_MED
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), Spark jobs fn launched)``, counted by a
+    job group unique to the call."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -200,6 +200,38 @@ def test_s2_cell_cols_matches_numpy(spark):
     assert len({int(v) >> 5 >> 26 for v in got}) == 6
 
 
+def test_s2_cell_cols_table_walk_matches_numpy_across_levels(spark):
+    """The table-driven Hilbert walk is bit-exact with ``s2_cell_np`` at
+    levels whose leading chunk has 1, 2, 0, 1 and 2 bits (1, 5, 12, 13,
+    30), on random points plus the poles, the antimeridian and points on
+    face boundaries (|x| = |y|, |y| = |z|, |x| = |z| and cube corners)."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_spark.geo.s2 import s2_cell_cols, s2_cell_np
+
+    rng = np.random.default_rng(7)
+    lat = list(np.degrees(np.arcsin(rng.uniform(-1, 1, 20_000))))
+    lon = list(rng.uniform(-180, 180, 20_000))
+    corner = float(np.degrees(np.arctan(1 / np.sqrt(2))))
+    special = [(90.0, 0.0), (-90.0, 0.0), (90.0, 180.0), (0.0, 180.0),
+               (0.0, -180.0), (45.0, 180.0), (-45.0, -180.0)]
+    special += [(la, lo) for lo in (45.0, 135.0, -45.0, -135.0) for la in (0.0, 20.0, -20.0)]
+    special += [(la, lo) for la in (45.0, -45.0) for lo in (0.0, 90.0, 180.0, -90.0, 30.0)]
+    special += [(la, lo) for la in (corner, -corner) for lo in (45.0, 135.0, -45.0, -135.0)]
+    lat += [a for a, _ in special]
+    lon += [b for _, b in special]
+    pdf = pd.DataFrame({"k": np.arange(len(lat)), "lat": lat, "lon": lon})
+    df = spark.createDataFrame(pdf)
+    levels = (1, 5, 12, 13, 30)
+    for level in levels:
+        df = s2_cell_cols(df, level=level, out=f"s2_{level}")
+    got = df.toPandas().sort_values("k")
+    for level in levels:
+        exp = s2_cell_np(got["lat"].to_numpy(), got["lon"].to_numpy(), level)
+        assert np.array_equal(got[f"s2_{level}"].to_numpy(), exp), level
+
+
 def test_hex_cell_backend_dispatch(spark):
     """'native' backend ≡ hex_cell_expr; 'h3' is import-guarded (green
     with the library, clean ImportError without — never a silent

@@ -65,3 +65,36 @@ def test_drop_truncated_removes_backing_files(spark):
     assert not os.path.isdir(path)
     # no-op on a frame that was never truncated
     drop_truncated(spark.range(3))
+
+
+def test_drop_truncated_under_session_checkpoint_dir(spark, tmp_path):
+    """With a checkpoint dir set, truncations land under the ``file:`` URI
+    ``getCheckpointDir`` returns, and drop_truncated still removes them."""
+    sc = spark.sparkContext
+    prev = sc._jsc.sc().checkpointDir()  # Scala Option; no public reset
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        out = truncate_lineage(spark.range(10))
+        path = out._trunc_path
+        assert path.startswith("file:")
+        local = path.removeprefix("file:")
+        assert os.path.isdir(local)
+        assert out.count() == 10
+        drop_truncated(out)
+        assert not os.path.exists(local)
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(prev)
+
+
+def test_truncate_launches_only_its_write_jobs(spark, tmp_path, count_jobs):
+    """The re-read carries the written schema: no footer-inference job."""
+
+    def build():
+        return spark.range(500).select("id", (F.col("id") % 5).alias("k")).repartition(3)
+
+    _, write_jobs = count_jobs(lambda: build().write.parquet(str(tmp_path / "p")))
+    out, trunc_jobs = count_jobs(lambda: truncate_lineage(build()))
+    assert trunc_jobs == write_jobs, (trunc_jobs, write_jobs)
+    assert out.schema.names == ["id", "k"]
+    assert sorted(r.id for r in out.collect()) == list(range(500))
+    drop_truncated(out)

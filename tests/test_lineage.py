@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -85,3 +86,66 @@ def test_lineage_log_mode_validation(spark, tmp_path):
         LineageLog(spark)
     with _pytest.raises(ValueError):
         LineageLog(spark, base_dir=str(tmp_path), table_prefix="both")
+
+
+def test_resumed_flagship_launches_one_job_per_skipped_stage(
+    spark, sf_small_dir, tmp_path, count_jobs
+):
+    """A resume reads each checkpoint back (one footer-inference job per
+    stage) and writes its lineage rows on the driver: no Spark job for
+    the lineage log, so 5 jobs for the 5 skipped stages."""
+    out = str(tmp_path / "flagship")
+    run_flagship(spark, sf_small_dir, out)
+    res, n_jobs = count_jobs(lambda: run_flagship(spark, sf_small_dir, out))
+    assert all(res[s].skipped for s in ["pages", "points", "way_cells", "pip", "tiles"])
+    assert n_jobs <= 5, n_jobs
+    parts = [f for f in os.listdir(f"{out}/lineage") if not f.startswith((".", "_"))]
+    assert len(parts) == 10  # one driver-written part file per stage and run
+    skipped = res["log"].lineage().filter(F.col("skipped")).collect()
+    assert {r.stage for r in skipped} == {"pages", "points", "way_cells", "pip", "tiles"}
+    assert all(r.run_id == res["log"].run_id for r in skipped)
+
+
+def test_fresh_stage_launches_only_its_write_jobs(spark, tmp_path, count_jobs):
+    """A fresh parquet-mode stage costs exactly what its own write costs:
+    no lineage-append job and no footer-read job on the re-read."""
+    from osm_spark.pipeline.lineage import LineageLog
+
+    def build():
+        return spark.range(1000).select("id", (F.col("id") % 7).alias("k")).repartition(3)
+
+    _, write_jobs = count_jobs(lambda: build().write.parquet(str(tmp_path / "plain")))
+    log = LineageLog(spark, base_dir=str(tmp_path / "run"))
+    res, stage_jobs = count_jobs(lambda: log.run_stage("s", build))
+    assert stage_jobs == write_jobs, (stage_jobs, write_jobs)
+    assert res.output_rows == 1000
+    assert res.df.schema.names == ["id", "k"]
+    assert res.df.count() == 1000
+    lin = log.lineage().collect()
+    assert sum(r.output_rows for r in lin) == 1000
+    assert {r.partition_file for r in lin} == {
+        f for f in os.listdir(tmp_path / "run" / "stages" / "s") if f.endswith(".parquet")
+    }
+
+
+def test_resume_over_spark_written_lineage(spark, tmp_path):
+    """An out_dir whose lineage/ already holds Spark-written part files
+    (the earlier writer) still resumes, and lineage() returns the old
+    rows and the new driver-written ones together."""
+    from osm_spark.pipeline.lineage import LineageLog
+
+    base = str(tmp_path / "mixed")
+    LineageLog(spark, base_dir=base).run_stage("s", lambda: spark.range(50))
+    spark.createDataFrame(
+        [("old_run", "s", "part-old.parquet", 50, 7, False)],
+        "run_id string, stage string, partition_file string, "
+        "output_rows long, wall_ms long, skipped boolean",
+    ).write.mode("append").parquet(f"{base}/lineage")
+
+    log = LineageLog(spark, base_dir=base)
+    res = log.run_stage("s", lambda: spark.range(0))
+    assert res.skipped and res.df.count() == 50
+    rows = log.lineage().collect()
+    assert {r.run_id for r in rows} >= {"old_run", log.run_id}
+    assert [r.skipped for r in rows if r.run_id == log.run_id] == [True]
+    assert [r.output_rows for r in rows if r.run_id == "old_run"] == [50]

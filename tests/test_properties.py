@@ -17,7 +17,7 @@ from osm_spark.geo.hexgrid import (
     pack,
     unpack,
 )
-from osm_spark.geo.s2 import _hilbert_pos, s2_cell_np, s2_parent_np
+from osm_spark.geo.s2 import _hilbert_pos, _hilbert_pos_lut, s2_cell_np, s2_parent_np
 
 lats = st.floats(min_value=-84.9, max_value=84.9, allow_nan=False)
 lons = st.floats(min_value=-179.9, max_value=179.9, allow_nan=False)
@@ -98,3 +98,18 @@ def test_pip_regular_polygon_contains_scaled_interior(clat, clon, radius, nv, sh
     outer_lon = clon + (2.0 + shrink) * radius * np.cos(ang + 0.1)
     assert points_in_polygon_np(inner_lon, inner_lat, vlon, vlat).all()
     assert not points_in_polygon_np(outer_lon, outer_lat, vlon, vlat).any()
+
+
+def test_hilbert_table_walk_equals_loop():
+    """The lookup-table walk ``s2_cell_cols`` runs equals the xy→d loop:
+    exhaustively on every cell of levels 1–8, and on 10^5 random (i, j)
+    per level from 9 to 30 (leading chunks of 1, 2, 3 and 0 bits)."""
+    for level in range(1, 9):
+        n = 1 << level
+        ii, jj = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+        i, j = ii.ravel(), jj.ravel()
+        assert np.array_equal(_hilbert_pos_lut(i, j, level), _hilbert_pos(i, j, level))
+    rng = np.random.default_rng(13)
+    for level in range(9, 31):
+        i, j = rng.integers(0, 1 << level, size=(2, 100_000))
+        assert np.array_equal(_hilbert_pos_lut(i, j, level), _hilbert_pos(i, j, level)), level
