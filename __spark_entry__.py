@@ -2091,8 +2091,8 @@ def _dbscan_oracle() -> str:
     float rides the value hash."""
     eps = repr(float(_DBSCAN_EPS_M))
     return f"""
-        WITH RECURSIVE pts AS ({_sql_points_oracle()}),
-        prs AS (
+        WITH RECURSIVE pts AS MATERIALIZED ({_sql_points_oracle()}),
+        prs AS MATERIALIZED (
             SELECT a.point_id AS a_id, b.point_id AS b_id
             FROM pts a JOIN pts b ON a.point_id < b.point_id
             WHERE 2.0 * 6371000.0 * asin(sqrt(
@@ -2100,31 +2100,31 @@ def _dbscan_oracle() -> str:
                     + cos(radians(a.lat)) * cos(radians(b.lat))
                       * pow(sin(radians(b.lon - a.lon) / 2.0), 2))) <= {eps}
         ),
-        deg AS (
+        deg AS MATERIALIZED (
             SELECT id, count(*) AS deg FROM (
                 SELECT a_id AS id FROM prs
                 UNION ALL SELECT b_id FROM prs
             ) GROUP BY id
         ),
-        core AS (
+        core AS MATERIALIZED (
             SELECT p.point_id AS id
             FROM pts p LEFT JOIN deg ON deg.id = p.point_id
             WHERE coalesce(deg.deg, 0) + 1 >= {_DBSCAN_MIN_PTS}
         ),
-        ce AS (
+        ce AS MATERIALIZED (
             SELECT a_id, b_id FROM prs
             WHERE a_id IN (SELECT id FROM core)
               AND b_id IN (SELECT id FROM core)
         ),
-        sym AS (SELECT a_id AS u, b_id AS v FROM ce
+        sym AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM ce
                 UNION SELECT b_id, a_id FROM ce),
         reach(id, r) AS (
             SELECT id, id FROM core
             UNION
             SELECT s.u, reach.r FROM sym s JOIN reach ON reach.id = s.v
         ),
-        comp AS (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id),
-        border AS (
+        comp AS MATERIALIZED (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id),
+        border AS MATERIALIZED (
             SELECT t.id, MIN(c.cluster) AS cluster FROM (
                 SELECT a_id AS id, b_id AS cid FROM prs
                 UNION ALL SELECT b_id, a_id FROM prs
@@ -2171,11 +2171,11 @@ def _st_dbscan_oracle() -> str:
     haversine, plus |Δts| ≤ eps_t with ts = point_id·7451 mod 36000."""
     eps = repr(float(_ST_EPS_M))
     return f"""
-        WITH RECURSIVE pts AS (
+        WITH RECURSIVE pts AS MATERIALIZED (
             SELECT point_id, lat, lon, point_id * 7451 % 36000 AS ts
             FROM ({_sql_points_oracle()})
         ),
-        prs AS (
+        prs AS MATERIALIZED (
             SELECT a.point_id AS a_id, b.point_id AS b_id
             FROM pts a JOIN pts b ON a.point_id < b.point_id
             WHERE abs(a.ts - b.ts) <= {_ST_EPS_T}
@@ -2184,31 +2184,31 @@ def _st_dbscan_oracle() -> str:
                     + cos(radians(a.lat)) * cos(radians(b.lat))
                       * pow(sin(radians(b.lon - a.lon) / 2.0), 2))) <= {eps}
         ),
-        deg AS (
+        deg AS MATERIALIZED (
             SELECT id, count(*) AS deg FROM (
                 SELECT a_id AS id FROM prs
                 UNION ALL SELECT b_id FROM prs
             ) GROUP BY id
         ),
-        core AS (
+        core AS MATERIALIZED (
             SELECT p.point_id AS id
             FROM pts p LEFT JOIN deg ON deg.id = p.point_id
             WHERE coalesce(deg.deg, 0) + 1 >= {_ST_MIN_PTS}
         ),
-        ce AS (
+        ce AS MATERIALIZED (
             SELECT a_id, b_id FROM prs
             WHERE a_id IN (SELECT id FROM core)
               AND b_id IN (SELECT id FROM core)
         ),
-        sym AS (SELECT a_id AS u, b_id AS v FROM ce
+        sym AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM ce
                 UNION SELECT b_id, a_id FROM ce),
         reach(id, r) AS (
             SELECT id, id FROM core
             UNION
             SELECT s.u, reach.r FROM sym s JOIN reach ON reach.id = s.v
         ),
-        comp AS (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id),
-        border AS (
+        comp AS MATERIALIZED (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id),
+        border AS MATERIALIZED (
             SELECT t.id, MIN(c.cluster) AS cluster FROM (
                 SELECT a_id AS id, b_id AS cid FROM prs
                 UNION ALL SELECT b_id, a_id FROM prs
@@ -3849,12 +3849,17 @@ def _corpus_pipeline_oracle() -> str:
     sums, CCNet line-window dedup, minhash/band/jaccard, recursive-CTE
     components + min-keeper, quota rank, pack prefix sum) chained as
     CTEs, each reading the previous stage's survivors — the composition
-    IS what this oracle attests."""
+    IS what this oracle attests.
+
+    Every non-recursive CTE is ``AS MATERIALIZED``: DuckDB inlines plain
+    CTEs, so without it the whole minhash/band/jaccard chain behind
+    ``sym`` re-runs inside the recursive ``reach`` join and the replay
+    runs out of memory even at sf0.001."""
     rule_values = ", ".join(
         f"('{h}', '{p}', {str(bool(a)).upper()})" for h, p, a in _CP_RULES
     )
     return rf"""
-        WITH RECURSIVE base AS (
+        WITH RECURSIVE base AS MATERIALIZED (
             SELECT doc_id, source, text,
                    'http://h' || ((doc_id // 2) % 3) || '.example.com/page/'
                        || (doc_id // 2) AS canon_url,
@@ -3862,15 +3867,15 @@ def _corpus_pipeline_oracle() -> str:
                    '/page/' || (doc_id // 2) AS path
             FROM documents
         ),
-        kept AS (
+        kept AS MATERIALIZED (
             SELECT * FROM (
                 SELECT base.*, ROW_NUMBER() OVER (
                     PARTITION BY canon_url
                     ORDER BY length(text) DESC, doc_id) AS rn
                 FROM base) WHERE rn = 1
         ),
-        rules(rhost, prefix, allow) AS (VALUES {rule_values}),
-        rbest AS (
+        rules(rhost, prefix, allow) AS MATERIALIZED (VALUES {rule_values}),
+        rbest AS MATERIALIZED (
             SELECT doc_id, allow FROM (
                 SELECT k.doc_id, r.allow, ROW_NUMBER() OVER (
                     PARTITION BY k.doc_id
@@ -3879,11 +3884,11 @@ def _corpus_pipeline_oracle() -> str:
                   ON r.rhost = k.host AND starts_with(k.path, r.prefix)
             ) WHERE rk = 1
         ),
-        allowed AS (
+        allowed AS MATERIALIZED (
             SELECT k.* FROM kept k LEFT JOIN rbest USING (doc_id)
             WHERE COALESCE(rbest.allow, TRUE)
         ),
-        qcut AS (
+        qcut AS MATERIALIZED (
             SELECT doc_id FROM (
                 SELECT doc_id, round(
                     least(len(string_split(lower(text), ' ')) / 100.0, 1.0) * 0.25
@@ -3899,84 +3904,84 @@ def _corpus_pipeline_oracle() -> str:
                 FROM allowed
             ) WHERE qs >= {_CP_QUALITY_MIN}
         ),
-        qa AS (SELECT a.* FROM allowed a JOIN qcut USING (doc_id)),
-        t_ AS (
+        qa AS MATERIALIZED (SELECT a.* FROM allowed a JOIN qcut USING (doc_id)),
+        t_ AS MATERIALIZED (
             SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS word
             FROM qa
         ),
-        tk AS (SELECT doc_id, word FROM t_ WHERE word <> ''),
-        v AS (SELECT word, count(*) AS c FROM tk GROUP BY word),
-        s AS (SELECT CAST(sum(c) AS BIGINT) AS total, count(*) AS v_size FROM v),
-        lw AS (
+        tk AS MATERIALIZED (SELECT doc_id, word FROM t_ WHERE word <> ''),
+        v AS MATERIALIZED (SELECT word, count(*) AS c FROM tk GROUP BY word),
+        s AS MATERIALIZED (SELECT CAST(sum(c) AS BIGINT) AS total, count(*) AS v_size FROM v),
+        lw AS MATERIALIZED (
             SELECT tk.doc_id,
                    CAST(round(ln((v.c + 1)::DOUBLE / (s.total + s.v_size)::DOUBLE)
                               * 1000000.0) AS BIGINT) AS lw
             FROM tk JOIN v USING (word) CROSS JOIN s
         ),
-        lmcut AS (
+        lmcut AS MATERIALIZED (
             SELECT doc_id FROM (
                 SELECT doc_id,
                        round(CAST(sum(lw) AS DOUBLE) / 1000000.0 / count(*), 6) AS m
                 FROM lw GROUP BY doc_id
             ) WHERE m >= {_CP_LM_MIN}
         ),
-        la AS (SELECT qa.* FROM qa JOIN lmcut USING (doc_id)),
-        w_ AS (SELECT doc_id, string_split(text, ' ') AS ws FROM la),
-        l_ AS (
+        la AS MATERIALIZED (SELECT qa.* FROM qa JOIN lmcut USING (doc_id)),
+        w_ AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM la),
+        l_ AS MATERIALIZED (
             SELECT doc_id, i::BIGINT AS line_no,
                    array_to_string(ws[(i*8+1):(i*8+8)], ' ') AS line
             FROM w_, UNNEST(range(greatest(1, (len(ws)+7)//8))) AS t(i)
         ),
-        k_ AS (
+        k_ AS MATERIALIZED (
             SELECT doc_id, line_no, line, row_number() OVER (
                 PARTITION BY md5(line) ORDER BY doc_id, line_no) AS rn
             FROM l_
         ),
-        agg AS (
+        agg AS MATERIALIZED (
             SELECT doc_id,
                    string_agg(line, chr(10) ORDER BY line_no)
                        FILTER (WHERE rn = 1) AS clean_text,
                    count(*) FILTER (WHERE rn = 1) AS n_kept
             FROM k_ GROUP BY doc_id
         ),
-        ld AS (
+        ld AS MATERIALIZED (
             SELECT la.doc_id, la.source, la.canon_url, agg.clean_text,
                    replace(agg.clean_text, chr(10), ' ') AS flat_text
             FROM la JOIN agg USING (doc_id) WHERE agg.n_kept > 0
         ),
-        tok AS (
+        tok AS MATERIALIZED (
             SELECT doc_id,
                    unnest(list_distinct(string_split(lower(flat_text), ' '))) AS tok
             FROM ld
         ),
-        seeded AS (
+        seeded AS MATERIALIZED (
             SELECT doc_id, seed, tok
             FROM tok CROSS JOIN (SELECT unnest(range(32)) AS seed) sx
         ),
-        sig AS (
+        sig AS MATERIALIZED (
             SELECT doc_id, seed, min(md5(seed::VARCHAR || ':' || tok)) AS minhash
             FROM seeded GROUP BY doc_id, seed
         ),
-        band AS (
+        band AS MATERIALIZED (
             SELECT doc_id, seed % 2 AS band,
                    md5(string_agg(minhash, ',' ORDER BY seed)) AS band_hash
             FROM sig GROUP BY doc_id, seed % 2
         ),
-        prs AS (
+        prs AS MATERIALIZED (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM band a JOIN band b
               ON a.band = b.band AND a.band_hash = b.band_hash
             WHERE a.doc_id < b.doc_id
         ),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
-        inter AS (
+        sizes AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
+        inter AS MATERIALIZED (
             SELECT p.doc_a, p.doc_b, count(*) AS n_inter
             FROM prs p
             JOIN tok ta ON ta.doc_id = p.doc_a
             JOIN tok tb ON tb.doc_id = p.doc_b AND tb.tok = ta.tok
             GROUP BY p.doc_a, p.doc_b
         ),
-        jp AS (
+        jp AS MATERIALIZED (
             SELECT doc_a, doc_b FROM (
                 SELECT i.doc_a, i.doc_b,
                        round(n_inter / CAST(sa.sz + sb.sz - n_inter AS DOUBLE), 6) AS j
@@ -3985,7 +3990,7 @@ def _corpus_pipeline_oracle() -> str:
                 JOIN sizes sb ON sb.doc_id = i.doc_b
             ) WHERE j >= {_CP_JACCARD}
         ),
-        sym AS (
+        sym AS MATERIALIZED (
             SELECT doc_a AS u, doc_b AS v FROM jp
             UNION SELECT doc_b, doc_a FROM jp
         ),
@@ -3994,25 +3999,25 @@ def _corpus_pipeline_oracle() -> str:
             UNION
             SELECT s2.u, reach.r FROM sym s2 JOIN reach ON reach.id = s2.v
         ),
-        comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
-        keepers AS (
+        comp AS MATERIALIZED (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
+        keepers AS MATERIALIZED (
             SELECT ld.* FROM ld LEFT JOIN comp ON comp.id = ld.doc_id
             WHERE comp.id IS NULL OR comp.component = ld.doc_id
         ),
-        qs_ AS (
+        qs_ AS MATERIALIZED (
             SELECT *, CAST(ROW_NUMBER() OVER (
                 PARTITION BY source
                 ORDER BY md5('cp:' || CAST(doc_id AS VARCHAR)), doc_id
             ) AS INT) AS rk
             FROM keepers
         ),
-        qk AS (SELECT * FROM qs_ WHERE rk <= 20),
-        pt AS (
+        qk AS MATERIALIZED (SELECT * FROM qs_ WHERE rk <= 20),
+        pt AS MATERIALIZED (
             SELECT doc_id,
                    CAST(len(string_split(flat_text, ' ')) AS BIGINT) AS n_tok
             FROM qk
         ),
-        pc AS (
+        pc AS MATERIALIZED (
             SELECT doc_id, n_tok,
                    SUM(n_tok) OVER (ORDER BY doc_id
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -5100,7 +5105,7 @@ def _trimmed_stats_oracle() -> str:
         ),
         k AS (
             SELECT grp, value, c, cm, n,
-                   CAST(floor(n * {_TRIM_NUM} / {_TRIM_DEN}) AS BIGINT) AS t
+                   CAST(n * {_TRIM_NUM} // {_TRIM_DEN} AS BIGINT) AS t
             FROM cum
         ),
         agg AS (
@@ -7915,14 +7920,14 @@ def q_overlay_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _overlay_clusters_oracle() -> str:
     return f"""
-        WITH RECURSIVE pairs AS (
+        WITH RECURSIVE pairs AS MATERIALIZED (
             SELECT * FROM ({_overlay_pairs_oracle(self_join=True)}) t
         ),
-        sym AS (
+        sym AS MATERIALIZED (
             SELECT a_id AS u, b_id AS v FROM pairs
             UNION SELECT b_id, a_id FROM pairs
         ),
-        verts AS (
+        verts AS MATERIALIZED (
             SELECT DISTINCT CAST(way_id AS BIGINT) AS id
             FROM (VALUES {_polygons_values_sql()}) poly0(way_id, vlat, vlon)
         ),
@@ -7931,8 +7936,8 @@ def _overlay_clusters_oracle() -> str:
             UNION
             SELECT s.u, reach.r FROM sym s JOIN reach ON reach.id = s.v
         ),
-        comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-        sizes AS (
+        comp AS MATERIALIZED (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+        sizes AS MATERIALIZED (
             SELECT cluster_id, count(*) AS cluster_size
             FROM comp GROUP BY cluster_id
         )

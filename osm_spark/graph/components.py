@@ -20,12 +20,38 @@ label mapping with itself each round, so convergence is O(log diameter)
 round is three hash exchanges over (id, label) pairs — 16 bytes/vertex,
 never the edge payload twice — with map-side min combiners; the
 convergence test rides the round's own output as a changed flag
-(``star`` is the previous label), so the per-round actions are exactly
-the truncation write plus a scan-count of it. Each round's labels are
-lineage-truncated (graph/iterate.py): the round plan references the
-previous labels three times, so without truncation the logical plan
-grows 3^rounds — the Catalyst-cloning landmine, observed as a 2 GiB
-plan string at round 10.
+(``star`` is the previous label) whose sum the truncation write
+observes, so a round's only action is that write (14 jobs at local[4],
+pinned by a test). Each round's labels are lineage-truncated
+(graph/iterate.py): the round plan references the previous labels three
+times, so without truncation the logical plan grows 3^rounds — the
+Catalyst-cloning landmine, observed as a 2 GiB plan string at round 10.
+
+Driver rung
+-----------
+The first truncation writes the raw (a, b) pairs as (u, v), and the
+write observes their row count and null count (no extra job). When there
+are at most ``DRIVER_MAX_EDGES`` pairs, the leaf is local (the temp dir
+or a ``file:`` checkpoint dir), the ids are integral and none is null,
+the whole fixpoint runs on the driver instead: pyarrow reads the leaf,
+``np.unique`` maps ids to dense indices, and ``_np_round`` repeats
+``_round`` step for step in vectorized numpy (``np.minimum.at`` for the
+neighbour-min and star aggregates, ``lab[lab]`` for the jumps). It is
+exact, not approximate: ``np.unique`` returns the ids sorted, so the
+minimum index of a component is its minimum id, and the same rounds
+produce the same labels and the same round count, so ``max_iter``
+raises on exactly the graphs the distributed loop raises on. The
+result is written back with pyarrow as a parquet leaf in the truncation
+dir (``iterate.arrow_leaf``), with the id type of the distributed
+path's output. On ~24k near-dup pairs this cut the whole near-dup op
+(pairs plus clustering) from 62 Spark jobs to 11 (BENCH.md #18).
+
+The ceiling is sized by driver memory: on 4 cores, a synthetic graph
+with a giant component took 0.04 s and +27 MB peak RSS at 200k pairs,
+0.52 s and +208 MB at 2M, 1.4 s and +407 MB at 4M (≈100 bytes per
+pair, read through write, 6–7 rounds). 2M keeps the driver's share
+near 200 MB; past it, on shared storage, or with null or non-integral
+ids, the distributed loop runs.
 
 Convergence is to the exact minimum vertex id per component, so the
 result is independent of round count and replayable by any transitive-
@@ -39,10 +65,22 @@ pathology; hitting it raises rather than returning a wrong answer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import NoReturn
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructField, StructType
+
+from osm_spark.graph.iterate import (
+    arrow_leaf,
+    drop_truncated,
+    local_dir,
+    truncate_lineage,
+)
+
+# Raw (a, b) pairs at or under this count are labelled on the driver
+# (module docstring, "Driver rung"); 0 turns the rung off.
+DRIVER_MAX_EDGES = 2_000_000
 
 
 def _symmetrize(pairs: DataFrame, a: str, b: str) -> DataFrame:
@@ -106,6 +144,68 @@ def _round(edges: DataFrame, labels: DataFrame, jumps: int = 2) -> DataFrame:
     return cur
 
 
+def _np_round(eu, ev, lab, jumps: int = 2):
+    """``_round`` on the driver over dense vertex indices, step for step:
+    neighbour-min over both edge directions, star aggregate, star
+    broadcast, ``jumps`` pointer jumps. Returns (new labels, number of
+    vertices whose label changed)."""
+    import numpy as np
+
+    n = len(lab)
+    nbr = np.full(n, n)  # above every index: "no neighbour"
+    np.minimum.at(nbr, eu, lab[ev])
+    np.minimum.at(nbr, ev, lab[eu])
+    cand = np.minimum(lab, nbr)
+    star = np.full(n, n)
+    np.minimum.at(star, lab, cand)
+    cur = np.minimum(cand, star[lab])
+    for _ in range(jumps):
+        cur = np.minimum(cur, cur[cur])
+    return cur, int(np.count_nonzero(cur != lab))
+
+
+def _driver_components(
+    spark: SparkSession, local: str, id_type: IntegralType, max_iter: int
+) -> DataFrame:
+    """The driver rung: the raw (u, v) leaf at ``local`` read with
+    pyarrow, labelled by ``_np_round`` to the same fixpoint in the same
+    number of rounds, written back as an ``arrow_leaf``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    t = pq.read_table(local, columns=["u", "v"])
+    u, v = (t.column(c).to_numpy() for c in ("u", "v"))
+    # Sorted ids: the smallest dense index is also the smallest id, so
+    # min-label over indices converges to the min id per component.
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    eu, ev = inv[: len(u)], inv[len(u):]
+    lab = np.arange(len(ids))
+    for _ in range(max_iter):
+        lab, changed = _np_round(eu, ev, lab)
+        if changed == 0:
+            schema = StructType(
+                [StructField("id", id_type), StructField("component", id_type)]
+            )
+            arrow_type = to_arrow_type(id_type)
+            table = pa.table(
+                {
+                    "id": pa.array(ids, arrow_type),
+                    "component": pa.array(ids[lab], arrow_type),
+                }
+            )
+            return arrow_leaf(spark, table, schema)
+    _nonconvergence(max_iter)
+
+
+def _nonconvergence(max_iter: int) -> NoReturn:
+    raise RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} "
+        "rounds (diameter > 2^max_iter is not a real graph; check input)"
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     a: str = "a",
@@ -119,7 +219,28 @@ def connected_components(
     the full vertex set back in afterwards if needed (dedup_clusters
     does).
     """
-    edges = truncate_lineage(_symmetrize(pairs, a, b))
+    raw = truncate_lineage(
+        pairs.select(F.col(a).alias("u"), F.col(b).alias("v")),
+        n=F.count(F.lit(1)),
+        nulls=F.count_if(F.col("u").isNull() | F.col("v").isNull()),
+    )
+    sym = _symmetrize(raw, "u", "v")
+    id_type = sym.schema["u"].dataType  # both columns, widened as the loop does
+    local = local_dir(raw)
+    if (
+        0 < DRIVER_MAX_EDGES
+        and raw._observed["n"] <= DRIVER_MAX_EDGES
+        and raw._observed["nulls"] == 0
+        and local is not None
+        and isinstance(id_type, IntegralType)
+    ):
+        try:
+            return _driver_components(raw.sparkSession, local, id_type, max_iter)
+        finally:
+            drop_truncated(raw)
+
+    edges = truncate_lineage(sym)
+    drop_truncated(raw)
     labels = truncate_lineage(
         edges.select(F.col("u").alias("id"))
         .distinct()
@@ -128,30 +249,25 @@ def connected_components(
 
     prev: DataFrame | None = None
     for _ in range(max_iter):
-        # _chg folds the convergence test into the round's own output:
-        # the truncation write is the only heavy job, and the check is a
-        # scan-filter-count over the parquet just written — no join back
-        # to the previous round's table.
+        # _chg folds the convergence test into the round's own output,
+        # and the write observes its sum: no join back to the previous
+        # round's table and no separate count job.
         new_labels = truncate_lineage(
             _round(edges, labels)
             .withColumn("_chg", F.col("comp") != F.col("_prev"))
-            .drop("_prev")
+            .drop("_prev"),
+            changed=F.count_if("_chg"),
         )
-        changed = new_labels.where("_chg").count()
         if prev is not None:
             drop_truncated(prev)  # two rounds back: no longer referenced
         prev, labels = labels, new_labels
-        if changed == 0:
-            if prev is not None:
-                drop_truncated(prev)
+        if new_labels._observed["changed"] == 0:
+            drop_truncated(prev)
             drop_truncated(edges)
             return labels.select("id", F.col("comp").alias("component"))
 
     drop_truncated(edges)
-    raise RuntimeError(
-        f"connected_components did not converge in max_iter={max_iter} "
-        "rounds (diameter > 2^max_iter is not a real graph; check input)"
-    )
+    _nonconvergence(max_iter)
 
 
 def dedup_clusters(

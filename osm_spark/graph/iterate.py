@@ -23,6 +23,11 @@ distributed materialization (exactly what a reliable checkpoint does),
 and the re-read's leaf stats come from real file sizes — bounded AND
 honest, so broadcast decisions inside later rounds stay correct.
 
+A loop reads its convergence statistic from the truncation write itself
+(``truncate_lineage(df, changed=...)`` observes it), so a round costs
+no job beyond that write. A result computed on the driver becomes the
+same kind of leaf through ``arrow_leaf``.
+
 Files land under the session's checkpoint dir when one is set (the
 cluster configuration), else a per-process temp dir. Superseded rounds
 should be released with ``drop_truncated`` — iterative callers do this
@@ -37,13 +42,14 @@ import tempfile
 import uuid
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 _FALLBACK_DIR: str | None = None
 
 
-def _base_dir(df: DataFrame) -> str:
-    ckpt = df.sparkSession.sparkContext.getCheckpointDir()
+def _base_dir(spark: SparkSession) -> str:
+    ckpt = spark.sparkContext.getCheckpointDir()
     if ckpt is not None:
         return ckpt
     global _FALLBACK_DIR
@@ -52,16 +58,66 @@ def _base_dir(df: DataFrame) -> str:
     return _FALLBACK_DIR
 
 
-def truncate_lineage(df: DataFrame) -> DataFrame:
+def _new_path(spark: SparkSession) -> str:
+    return f"{_base_dir(spark).rstrip('/')}/t-{uuid.uuid4().hex}"
+
+
+def _local(path: str) -> str | None:
+    """The filesystem path behind a local path or ``file:`` URI, else None."""
+    if path.startswith("file:"):
+        path = urlparse(path).path
+    return path if path.startswith("/") else None
+
+
+def truncate_lineage(df: DataFrame, **observe: Column) -> DataFrame:
     """Materialize ``df`` to parquet and return a fresh-leaf scan of it.
 
     The returned DataFrame records its backing path in ``_trunc_path``
     so loops can release superseded rounds via ``drop_truncated``.
+
+    ``observe`` names aggregate expressions over ``df`` (a row count, a
+    changed-flag sum). They are computed by ``DataFrame.observe`` during
+    the write itself — no extra job — and their values land in the
+    returned frame's ``_observed`` dict.
     """
-    path = f"{_base_dir(df).rstrip('/')}/t-{uuid.uuid4().hex}"
-    df.write.parquet(path)
+    path = _new_path(df.sparkSession)
+    written, obs = df, None
+    if observe:
+        obs = Observation()
+        written = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
+    written.write.parquet(path)
     # The schema just written: no footer-inference job on the re-read.
     out = df.sparkSession.read.schema(df.schema).parquet(path)
+    out._trunc_path = path  # type: ignore[attr-defined]
+    out._observed = obs.get if obs else {}  # type: ignore[attr-defined]
+    return out
+
+
+def local_dir(df: DataFrame) -> str | None:
+    """The local directory behind a ``truncate_lineage`` result, or None
+    when it is not truncated or lives on shared storage."""
+    path = getattr(df, "_trunc_path", None)
+    return _local(path) if path else None
+
+
+def arrow_leaf(spark: SparkSession, table, schema: StructType) -> DataFrame:
+    """Write a driver-side pyarrow ``table`` as a truncation leaf.
+
+    For results computed on the driver: the single part file is written
+    with pyarrow into a new local truncation dir (the caller checks
+    ``local_dir`` first) and re-read with ``schema``, so downstream joins
+    see file-size statistics exactly as after ``truncate_lineage``, and
+    ``drop_truncated`` releases it the same way.
+    """
+    import pyarrow.parquet as pq
+
+    path = _new_path(spark)
+    local = _local(path)
+    if local is None:
+        raise ValueError(f"arrow_leaf needs a local truncation dir, got {path}")
+    os.makedirs(local)
+    pq.write_table(table, os.path.join(local, "part-00000.parquet"))
+    out = spark.read.schema(schema).parquet(path)
     out._trunc_path = path  # type: ignore[attr-defined]
     return out
 
@@ -74,8 +130,6 @@ def drop_truncated(df: DataFrame) -> None:
     storage follows the cluster's own retention policy, like Spark's
     reliable checkpoints. No-op for non-truncated frames.
     """
-    path = getattr(df, "_trunc_path", None)
-    if path and path.startswith("file:"):
-        path = urlparse(path).path
-    if path and path.startswith("/") and os.path.isdir(path):
+    path = local_dir(df)
+    if path and os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)

@@ -35,6 +35,7 @@ module; per-group = this one.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -122,6 +123,8 @@ def trimmed_stats(
     combined histogram aggregate over the big axis, windows over the
     per-group HISTOGRAM only.
     """
+    # integers only: they are spliced into the integer DIV below
+    trim_num, trim_den = operator.index(trim_num), operator.index(trim_den)
     if trim_num < 0 or trim_den <= 0 or 2 * trim_num >= trim_den:
         raise ValueError(
             f"trim must satisfy 0 <= trim_num/trim_den < 0.5, got "
@@ -144,7 +147,8 @@ def trimmed_stats(
         F.sum("_c").over(w_cum).alias("_cm"),
         F.sum("_c").over(w_all).alias("_n"),
     )
-    t = F.floor(F.col("_n") * trim_num / trim_den).cast("long")
+    # integer DIV: a double quotient rounds once n·trim_num passes 2^53
+    t = F.expr(f"_n * {trim_num} div {trim_den}")
     lo = t + 1
     hi = F.col("_n") - t
     kept = F.greatest(

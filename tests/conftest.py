@@ -52,3 +52,26 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def rung(monkeypatch):
+    """``rung(on)`` forces the connected-components driver rung on or off
+    (``DRIVER_MAX_EDGES = 0`` turns it off) and returns the list that
+    records each driver-rung call."""
+    import osm_spark.graph.components as components
+
+    calls = []
+    orig, ceiling = components._driver_components, components.DRIVER_MAX_EDGES
+
+    def spy(*args):
+        calls.append(args)
+        return orig(*args)
+
+    monkeypatch.setattr(components, "_driver_components", spy)
+
+    def force(on: bool):
+        monkeypatch.setattr(components, "DRIVER_MAX_EDGES", ceiling if on else 0)
+        return calls
+
+    return force

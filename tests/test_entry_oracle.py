@@ -86,3 +86,20 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert df.columns == ["url", "way_id", "name"]
+
+
+CC_QUERIES = [
+    "connected_components", "dbscan_clusters", "st_dbscan_clusters",
+    "overlay_clusters", "corpus_pipeline",
+]
+
+
+@pytest.mark.parametrize("on", [True, False], ids=["driver", "loop"])
+@pytest.mark.parametrize("name", CC_QUERIES)
+def test_cc_query_matches_oracle_on_both_rungs(spark, duck, sf_med_dir, name, on, rung):
+    """At sf0.01 every query that runs connected components takes the
+    driver rung; the ``loop`` runs force the distributed loop instead, so
+    the gate covers both paths, and each run asserts which one it took."""
+    calls = rung(on)
+    test_query_matches_oracle(spark, duck, sf_med_dir, name)
+    assert (len(calls) > 0) == on, len(calls)

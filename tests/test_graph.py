@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
+import osm_spark.graph.components as components
 from osm_spark.graph.components import connected_components, dedup_clusters
 from osm_spark.graph.pagerank import SCALE, out_degrees, pagerank, vertex_ids
 
@@ -153,6 +156,142 @@ def test_dedup_clusters_on_jaccard_pairs(spark, sf_small_dir):
     # keeper count == cluster count; sizes sum to n_docs
     assert sum(r.is_keeper for r in got) == len({r.cluster_id for r in got})
     assert sum(r.cluster_size for r in got if r.is_keeper) == n_docs
+
+
+# ------------------------------------------------- driver rung vs loop
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """Disjoint shapes over a shuffled id pool that mixes small, negative
+    and near-int64-extreme ids: a random forest, a chain with shortcuts,
+    near-cliques, self-loops, and duplicate and reversed pairs."""
+    rng = random.Random(seed)
+    pool = (
+        [2**63 - 1 - i for i in range(40)]
+        + [-(2**63) + i for i in range(40)]
+        + rng.sample(range(-10**6, 10**6), 400)
+    )
+    rng.shuffle(pool)
+    it = iter(pool)
+    take = lambda k: [next(it) for _ in range(k)]  # noqa: E731
+    pairs = []
+    for _ in range(4):  # forest: each vertex hangs off an earlier one
+        t = take(rng.randint(2, 25))
+        pairs += [(t[i], t[rng.randrange(i)]) for i in range(1, len(t))]
+    chain = take(120)
+    pairs += list(zip(chain, chain[1:]))
+    pairs += [tuple(rng.sample(chain, 2)) for _ in range(6)]
+    for _ in range(5):  # near-cliques: most of all pairs
+        c = take(rng.randint(3, 9))
+        pairs += [(x, y) for x in c for y in c if x < y and rng.random() < 0.7]
+    loops = take(6)
+    pairs += [(x, x) for x in loops] + [(loops[0], loops[1])]
+    dups = rng.sample(pairs, 15)
+    pairs += dups + [(b, a) for a, b in dups]
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_components_rung_equals_loop_equals_union_find(spark, rung, seed):
+    pairs = _random_graph(seed)
+    df = spark.createDataFrame(pairs, "a long, b long")
+    want = _union_find(pairs)
+    for on in (True, False):
+        calls = rung(on)
+        got = {r.id: r.component for r in connected_components(df).collect()}
+        assert got == want, on
+        assert len(calls) == (1 if on else 0)
+        calls.clear()
+
+
+@pytest.mark.parametrize("n", [40, 100])
+def test_components_smallest_max_iter_same_on_both_rungs(spark, rung, n):
+    df = spark.createDataFrame([(i, i + 1) for i in range(n)], "a long, b long")
+    rung(True)
+    k = next(
+        k for k in range(1, 20)
+        if _converges(lambda: connected_components(df, max_iter=k))
+    )
+    assert k > 2  # a path needs more rounds than a near-clique
+    rung(False)
+    assert _converges(lambda: connected_components(df, max_iter=k))
+    assert not _converges(lambda: connected_components(df, max_iter=k - 1))
+
+
+def _converges(fn) -> bool:
+    try:
+        fn()
+    except RuntimeError as e:
+        assert "did not converge" in str(e)
+        return False
+    return True
+
+
+def test_components_null_and_string_ids_take_the_loop(spark, rung):
+    calls = rung(True)
+    nulls = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (4, 5), (5, 6)], "a long, b long"
+    )
+    got = {r.id: r.component for r in connected_components(nulls).collect()}
+    # the loop's joins drop a null endpoint; its non-null partner stays
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 4, 6: 4}
+    words = [("b", "c"), ("a", "b"), ("x", "y"), ("z", "z")]
+    strs = spark.createDataFrame(words, "a string, b string")
+    got = {r.id: r.component for r in connected_components(strs).collect()}
+    assert got == _union_find(words)
+    assert calls == []
+
+
+def test_components_rung_keeps_the_id_type(spark, rung):
+    rung(True)
+    df = spark.createDataFrame([(1, 2), (3, 2)], "a int, b int")
+    out = connected_components(df)
+    assert out.schema.simpleString() == "struct<id:int,component:int>"
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 1), (2, 1), (3, 1)]
+
+
+def test_components_distributed_round_jobs_pinned(spark, count_jobs):
+    """One distributed round is its truncation write alone: 14 jobs at
+    local[4] (the changed count is observed on that write, where it was
+    a 15th job)."""
+    from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(300)], "a long, b long")
+    edges = truncate_lineage(components._symmetrize(pairs, "a", "b"))
+    labels = truncate_lineage(
+        edges.select(F.col("u").alias("id")).select("id", F.col("id").alias("comp"))
+    )
+    new, jobs = count_jobs(
+        lambda: truncate_lineage(
+            components._round(edges, labels)
+            .withColumn("_chg", F.col("comp") != F.col("_prev"))
+            .drop("_prev"),
+            changed=F.count_if("_chg"),
+        )
+    )
+    assert jobs == 14
+    assert new._observed["changed"] > 0
+    for df in (edges, labels, new):
+        drop_truncated(df)
+
+
+# one raw-pair write, then the keeper election's collect (its AQE stages)
+DEDUP_RUNG_JOBS = 5
+
+
+def test_dedup_clusters_on_the_rung_launches_no_job_per_round(spark, rung, count_jobs):
+    """The job count does not grow with the rounds: a one-round pair
+    and a 100-vertex path (several rounds) launch the same pinned number."""
+    rung(True)
+    docs = spark.range(300).select(F.col("id").alias("doc_id"))
+    seen = []
+    for pairs in ([(1, 2)], [(i, i + 1) for i in range(100)]):
+        df = spark.createDataFrame(pairs, "a long, b long")
+        out, jobs = count_jobs(lambda: dedup_clusters(docs, df).collect())
+        assert len(out) == 300
+        seen.append(jobs)
+    assert seen == [DEDUP_RUNG_JOBS] * 2, seen
 
 
 # ------------------------------------------------------- personalized PR

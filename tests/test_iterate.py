@@ -98,3 +98,39 @@ def test_truncate_launches_only_its_write_jobs(spark, tmp_path, count_jobs):
     assert out.schema.names == ["id", "k"]
     assert sorted(r.id for r in out.collect()) == list(range(500))
     drop_truncated(out)
+
+
+def test_truncate_observes_on_its_write(spark, tmp_path, count_jobs):
+    """``observe`` aggregates ride the write: same jobs as the plain write,
+    values on ``_observed``; empty input still fills them."""
+
+    def build(n):
+        return spark.range(n).select("id", (F.col("id") % 5 == 0).alias("hit")).repartition(3)
+
+    _, write_jobs = count_jobs(lambda: build(500).write.parquet(str(tmp_path / "p")))
+    out, trunc_jobs = count_jobs(
+        lambda: truncate_lineage(build(500), n=F.count(F.lit(1)), hits=F.count_if("hit"))
+    )
+    assert trunc_jobs == write_jobs, (trunc_jobs, write_jobs)
+    assert out._observed == {"n": 500, "hits": 100}
+    empty = truncate_lineage(build(0), n=F.count(F.lit(1)))
+    assert empty._observed == {"n": 0}
+    assert truncate_lineage(build(3))._observed == {}
+    for df in (out, empty):
+        drop_truncated(df)
+
+
+def test_arrow_leaf_is_a_droppable_leaf(spark):
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from osm_spark.graph.iterate import arrow_leaf, local_dir
+
+    schema = StructType([StructField("id", LongType())])
+    out = arrow_leaf(spark, pa.table({"id": pa.array([3, 1, 2], pa.int64())}), schema)
+    assert sorted(r.id for r in out.collect()) == [1, 2, 3]
+    assert 0 < int(_optimized(out).stats().sizeInBytes()) < 10**6
+    path = local_dir(out)
+    assert os.path.isdir(path)
+    drop_truncated(out)
+    assert not os.path.exists(path)

@@ -63,3 +63,33 @@ def test_trimmed_validation(spark, groups):
         trimmed_stats(df, "grp", "val", 1, 2)  # trim = 0.5 not allowed
     with pytest.raises(ValueError):
         trimmed_stats(df, "grp", "val", -1, 10)
+    with pytest.raises(TypeError):
+        trimmed_stats(df, "grp", "val", 0.1, 1)  # spliced into integer DIV
+
+
+# n·trim_num = 3·2^53 and trim_den = 3·2^53 + 1 round to the same double,
+# so a float quotient floors to 1 where the exact trim count is 0.
+BIG_TN, BIG_TD = 2**53, 3 * 2**53 + 1
+
+
+def test_trim_count_is_integer_division_past_2_53(spark):
+    df = spark.createDataFrame([("a", 1), ("a", 2), ("a", 3)], "grp string, val long")
+    r = trimmed_stats(df, "grp", "val", BIG_TN, BIG_TD).collect()[0]
+    assert (r.n, r.n_trim, r.lo_cut, r.hi_cut) == (3, 0, 1, 3)
+    assert r.trimmed_mean_micro == 2_000_000
+
+
+def test_trim_oracle_is_integer_division_past_2_53(monkeypatch):
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setattr(entrymod, "_TRIM_NUM", BIG_TN)
+    monkeypatch.setattr(entrymod, "_TRIM_DEN", BIG_TD)
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM (VALUES ('a', 1), ('a', 2), "
+        "('a', 3)) t(lang, n_chars)"
+    )
+    (row,) = con.sql(entrymod._trimmed_stats_oracle()).fetchall()
+    assert row[:5] == ("a", 3, 0, 1, 3)
