@@ -2143,13 +2143,16 @@ def _dbscan_oracle() -> str:
     """
 
 
-_ST_EPS_M, _ST_EPS_T, _ST_MIN_PTS = 1500.0, 1800, 10
+# min_pts 5 leaves ~300 core points and ~740 core-core pairs at sf0.01
+# (10 left one core and no pair), so the gate runs connected components
+# on a real graph.
+_ST_EPS_M, _ST_EPS_T, _ST_MIN_PTS = 1500.0, 1800, 5
 
 
 def q_st_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 family: ST-DBSCAN (geo/dbscan.py st_dbscan, Birant & Kut
     2007) — the spatiotemporal burst clusterer: (cell, time-bucket)
-    blocked pairs within 1500 m AND 1800 s, then the shared
+    blocked pairs within 1500 m AND 1800 s, min_pts 5, then the shared
     labels_from_pairs core/border/noise labeling — vs the brute-force +
     recursive-closure oracle with the time predicate added. Timestamps
     are a deterministic integer function of the key (replayed exactly)."""

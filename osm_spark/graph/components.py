@@ -18,14 +18,10 @@ Plain propagation needs O(diameter) rounds; the jump step composes the
 label mapping with itself each round, so convergence is O(log diameter)
 — a 100-vertex path closes in ~7 rounds, not 99 (tests pin this). Each
 round is three hash exchanges over (id, label) pairs — 16 bytes/vertex,
-never the edge payload twice — with map-side min combiners; the
-convergence test rides the round's own output as a changed flag
-(``star`` is the previous label) whose sum the truncation write
-observes, so a round's only action is that write (14 jobs at local[4],
-pinned by a test). Each round's labels are lineage-truncated
-(graph/iterate.py): the round plan references the previous labels three
-times, so without truncation the logical plan grows 3^rounds — the
-Catalyst-cloning landmine, observed as a 2 GiB plan string at round 10.
+never the edge payload twice — with map-side min combiners. Rounds run
+through ``iterate.fixpoint``; each carries a changed flag (``star`` is
+the previous label) that its write counts, so a round's only action is
+that write (14 jobs at local[4], pinned by a test).
 
 Driver rung
 -----------
@@ -74,6 +70,7 @@ from pyspark.sql.types import IntegralType, StructField, StructType
 from osm_spark.graph.iterate import (
     arrow_leaf,
     drop_truncated,
+    fixpoint,
     local_dir,
     truncate_lineage,
 )
@@ -241,33 +238,20 @@ def connected_components(
 
     edges = truncate_lineage(sym)
     drop_truncated(raw)
-    labels = truncate_lineage(
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
+    labels, converged = fixpoint(
+        lambda labels: _round(edges, labels)
+        .withColumn("_chg", F.col("comp") != F.col("_prev"))
+        .drop("_prev"),
+        edges.select(F.col("u").alias("id")).distinct().select("id", F.col("id").alias("comp")),
+        max_iter,
+        done=lambda obs, _: obs["changed"] == 0,
+        changed=F.count_if("_chg"),
     )
-
-    prev: DataFrame | None = None
-    for _ in range(max_iter):
-        # _chg folds the convergence test into the round's own output,
-        # and the write observes its sum: no join back to the previous
-        # round's table and no separate count job.
-        new_labels = truncate_lineage(
-            _round(edges, labels)
-            .withColumn("_chg", F.col("comp") != F.col("_prev"))
-            .drop("_prev"),
-            changed=F.count_if("_chg"),
-        )
-        if prev is not None:
-            drop_truncated(prev)  # two rounds back: no longer referenced
-        prev, labels = labels, new_labels
-        if new_labels._observed["changed"] == 0:
-            drop_truncated(prev)
-            drop_truncated(edges)
-            return labels.select("id", F.col("comp").alias("component"))
-
     drop_truncated(edges)
-    _nonconvergence(max_iter)
+    if not converged:
+        drop_truncated(labels)
+        _nonconvergence(max_iter)
+    return labels.select("id", F.col("comp").alias("component"))
 
 
 def dedup_clusters(

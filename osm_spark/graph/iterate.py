@@ -23,15 +23,26 @@ distributed materialization (exactly what a reliable checkpoint does),
 and the re-read's leaf stats come from real file sizes — bounded AND
 honest, so broadcast decisions inside later rounds stay correct.
 
-A loop reads its convergence statistic from the truncation write itself
-(``truncate_lineage(df, changed=...)`` observes it), so a round costs
-no job beyond that write. A result computed on the driver becomes the
-same kind of leaf through ``arrow_leaf``.
+Loops run through ``fixpoint(step, state, max_iter, *, done=None,
+**observe)``. A round is ``new = truncate_lineage(step(state),
+**observe)``: the write is its only job, and it computes the ``observe``
+aggregates (a changed-flag ``count_if``, a row count) into
+``new._observed``. ``fixpoint`` owns the rounds it writes, never the
+caller's initial state or the frames ``step`` reads. It drops the
+superseded state as soon as the new one is written (a truncated leaf
+reads only its own files). It stops after the first round where
+``done(new._observed, old._observed)`` holds (``{}`` for an initial state
+that observed nothing), or after exactly ``max_iter`` rounds when
+``done`` is None, and returns ``(state, converged)``: the caller owns
+that state; ``converged`` says whether ``done`` held (True without
+``done``). Guard-style callers drop it and raise their own error when
+not converged; bound-style callers return it. If a round raises, the
+current state is dropped (unless it is the initial one) and a partial
+write is removed before the error propagates.
 
-Files land under the session's checkpoint dir when one is set (the
-cluster configuration), else a per-process temp dir. Superseded rounds
-should be released with ``drop_truncated`` — iterative callers do this
-two rounds behind, mirroring Spark's own checkpoint-retention story.
+A result computed on the driver becomes a leaf of the same kind through
+``arrow_leaf``. Files land under the session's checkpoint dir when one
+is set (the cluster configuration), else a per-process temp dir.
 """
 
 from __future__ import annotations
@@ -40,6 +51,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import Callable
 from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -85,7 +97,11 @@ def truncate_lineage(df: DataFrame, **observe: Column) -> DataFrame:
     if observe:
         obs = Observation()
         written = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
-    written.write.parquet(path)
+    try:
+        written.write.parquet(path)
+    except BaseException:
+        _remove(path)
+        raise
     # The schema just written: no footer-inference job on the re-read.
     out = df.sparkSession.read.schema(df.schema).parquet(path)
     out._trunc_path = path  # type: ignore[attr-defined]
@@ -130,6 +146,36 @@ def drop_truncated(df: DataFrame) -> None:
     storage follows the cluster's own retention policy, like Spark's
     reliable checkpoints. No-op for non-truncated frames.
     """
-    path = local_dir(df)
-    if path and os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
+    _remove(getattr(df, "_trunc_path", ""))
+
+
+def _remove(path: str) -> None:
+    local = _local(path)
+    if local and os.path.isdir(local):
+        shutil.rmtree(local, ignore_errors=True)
+
+
+def fixpoint(
+    step: Callable[[DataFrame], DataFrame],
+    state: DataFrame,
+    max_iter: int,
+    *,
+    done: Callable[[dict, dict], bool] | None = None,
+    **observe: Column,
+) -> tuple[DataFrame, bool]:
+    """Iterate ``truncate_lineage(step(state), **observe)``; the contract
+    is in the module docstring."""
+    cur = state
+    try:
+        for _ in range(max_iter):
+            new = truncate_lineage(step(cur), **observe)
+            old, cur = cur, new
+            if old is not state:
+                drop_truncated(old)
+            if done is not None and done(new._observed, getattr(old, "_observed", {})):
+                return cur, True
+    except BaseException:
+        if cur is not state:
+            drop_truncated(cur)
+        raise
+    return cur, done is None

@@ -16,9 +16,10 @@ algorithm, run level-synchronously):
 
 Each round is one map-side-combined degree exchange plus two skinny
 semi-joins on the surviving vertex set — the edge payload is (u, v)
-longs only. Rounds are lineage-truncated (graph/iterate.py): the round
-plan references the previous edge set three times, the k^rounds
-logical-plan blow-up documented there. Convergence needs at most
+longs only. Rounds run through ``iterate.fixpoint``: the round plan
+references the previous edge set three times, the k^rounds
+logical-plan blow-up documented there, and the round's write observes
+its edge count, so convergence costs no job. Convergence needs at most
 |V(peeled)| rounds but in web graphs is near-instant (tendrils are
 shallow); ``max_iter`` bounds pathology and RAISES on non-convergence
 rather than returning a non-fixpoint (the components.py contract).
@@ -35,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 from osm_spark.graph.triangles import canonical_edges, vertex_degrees
 
 
@@ -54,27 +55,27 @@ def kcore(
     ``max_iter`` rounds (never returns a non-core)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    e = truncate_lineage(canonical_edges(edges, a, b))
-    n_prev = e.count()
-    for _ in range(max_iter):
-        deg = vertex_degrees(e)
-        survivors = deg.where(F.col("deg") >= k).select("id")
-        nxt = truncate_lineage(
-            e.join(
-                survivors.hint("shuffle_hash").withColumnRenamed("id", "u"), "u",
-                "left_semi",
-            ).join(
-                survivors.hint("shuffle_hash").withColumnRenamed("id", "v"), "v",
-                "left_semi",
-            )
+    n = F.count(F.lit(1))
+    e = truncate_lineage(canonical_edges(edges, a, b), n=n)
+
+    def peel(e: DataFrame) -> DataFrame:
+        survivors = vertex_degrees(e).where(F.col("deg") >= k).select("id")
+        return e.join(
+            survivors.hint("shuffle_hash").withColumnRenamed("id", "u"), "u",
+            "left_semi",
+        ).join(
+            survivors.hint("shuffle_hash").withColumnRenamed("id", "v"), "v",
+            "left_semi",
         )
-        n_edges = nxt.count()
-        drop_truncated(e)
-        e = nxt
-        # edges only shrink, so an unchanged count IS the fixpoint
-        if n_edges == n_prev or n_edges == 0:
-            return vertex_degrees(e)
-        n_prev = n_edges
-    raise RuntimeError(
-        f"kcore(k={k}) did not converge within max_iter={max_iter} rounds"
+
+    # edges only shrink, so an unchanged count IS the fixpoint
+    core, converged = fixpoint(
+        peel, e, max_iter, done=lambda new, old: new["n"] in (old["n"], 0), n=n
     )
+    drop_truncated(e)
+    if not converged:
+        drop_truncated(core)
+        raise RuntimeError(
+            f"kcore(k={k}) did not converge within max_iter={max_iter} rounds"
+        )
+    return vertex_degrees(core)

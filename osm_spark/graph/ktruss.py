@@ -19,8 +19,9 @@ edge granularity:
 
 Each round is the triangle machinery's bounded wedge exchange (the
 Suri-Vassilvitskii orientation keeps hub fan-out off single reducers)
-plus one map-side-combined support count and a semi join. Rounds are
-lineage-truncated; ``max_iter`` RAISES on non-convergence (the
+plus one map-side-combined support count and a semi join. Rounds run
+through ``iterate.fixpoint`` with the edge count observed on each
+round's write; ``max_iter`` RAISES on non-convergence (the
 components/kcore contract — never a non-fixpoint).
 
 Exactness: the k-truss is a closure — peeling order never changes the
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 from osm_spark.graph.triangles import canonical_edges, triangles
 
 __all__ = ["ktruss"]
@@ -75,22 +76,22 @@ def ktruss(
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     need = k - 2
-    e = truncate_lineage(canonical_edges(edges, a, b))
-    n_prev = e.count()
-    if n_prev == 0:
+    n = F.count(F.lit(1))
+    e = truncate_lineage(canonical_edges(edges, a, b), n=n)
+    if e._observed["n"] == 0:
         return _edge_support(e)
-    for _ in range(max_iter):
-        sup = _edge_support(e)
-        nxt = truncate_lineage(
-            sup.where(F.col("support") >= need).select("u", "v")
-        )
-        n_edges = nxt.count()
-        drop_truncated(e)
-        e = nxt
-        # edges only shrink, so an unchanged count IS the fixpoint
-        if n_edges == n_prev or n_edges == 0:
-            return _edge_support(e)
-        n_prev = n_edges
-    raise RuntimeError(
-        f"ktruss(k={k}) did not converge within max_iter={max_iter} rounds"
+    # edges only shrink, so an unchanged count IS the fixpoint
+    truss, converged = fixpoint(
+        lambda e: _edge_support(e).where(F.col("support") >= need).select("u", "v"),
+        e,
+        max_iter,
+        done=lambda new, old: new["n"] in (old["n"], 0),
+        n=n,
     )
+    drop_truncated(e)
+    if not converged:
+        drop_truncated(truss)
+        raise RuntimeError(
+            f"ktruss(k={k}) did not converge within max_iter={max_iter} rounds"
+        )
+    return _edge_support(truss)

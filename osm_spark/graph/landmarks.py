@@ -26,8 +26,8 @@ hop-bounded recursive-CTE oracle seeded with all k landmarks.
 Scale notes: k is routing config (dozens), never data-sized — the k
 ``min`` aggregate columns stay map-side combined and the row width is
 bounded; the frontier optimization keeps late-round work proportional
-to the improving subset exactly as in ``shortest_paths``. Rounds are
-lineage-truncated with the same two-behind release discipline.
+to the improving subset exactly as in ``shortest_paths``, and rounds run
+through the same ``iterate.fixpoint`` loop.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 
 __all__ = ["landmark_distances"]
 
@@ -82,11 +82,11 @@ def landmark_distances(
         for i, lm in enumerate(landmarks)
     ]
     schema = "id long, " + ", ".join(f"{c} long" for c in cols)
-    dist = truncate_lineage(spark.createDataFrame(seed_rows, schema))
-    frontier = dist  # rows improved last round
+    seeds = spark.createDataFrame(seed_rows, schema).withColumn("improved", F.lit(True))
 
-    prev: DataFrame | None = None
-    for _ in range(max_hops):
+    def relax(state: DataFrame) -> DataFrame:
+        # the frontier: rows improved last round — the seeds initially
+        frontier = state.where("improved")
         relaxed = (
             e.join(frontier.hint("shuffle_hash"), e["e_src"] == frontier["id"])
             .groupBy(F.col("e_dst").alias("id"))
@@ -106,20 +106,19 @@ def landmark_distances(
             improved = improved | (
                 (old.isNull() & cand.isNotNull()) | (cand < old)
             )
-        merged = dist.join(relaxed.hint("shuffle_hash"), "id", "full").select(
-            *sel, improved.alias("improved")
-        )
-        new_all = truncate_lineage(merged)
-        new_frontier = new_all.where("improved").select("id", *cols)
-        n_improved = new_frontier.limit(1).count()
-        if prev is not None:
-            drop_truncated(prev)
-        prev, dist = dist, new_all.select("id", *cols)
-        frontier = new_frontier
-        if n_improved == 0:
-            break
+        return state.select("id", *cols).join(
+            relaxed.hint("shuffle_hash"), "id", "full"
+        ).select(*sel, improved.alias("improved"))
 
-    out = dist.select(
+    dist, _ = fixpoint(
+        relax,
+        seeds,
+        max_hops,
+        done=lambda obs, _: obs["improved"] == 0,
+        improved=F.count_if("improved"),
+    )
+    drop_truncated(e)
+    return dist.select(
         "id",
         F.explode(
             F.array(
@@ -136,7 +135,3 @@ def landmark_distances(
         "id", F.col("_e.landmark").alias("landmark"),
         F.col("_e.dist_mm").alias("dist_mm"),
     ).where(F.col("dist_mm").isNotNull())
-    if prev is not None:
-        drop_truncated(prev)
-    drop_truncated(e)
-    return out

@@ -25,8 +25,8 @@ exchange-free), one map-side-combined (dst, label) count, one struct-min
 argmax per dst — min(struct(-cnt, label)) picks plurality-then-smallest
 in a single ObjectHashAggregate (the snap argmin precedent: a plain
 struct min stays in hash aggregation, no sort). Isolated vertices keep
-their label via the left merge. Rounds are lineage-truncated
-(graph/iterate.py).
+their label via the left merge. Rounds run through ``iterate.fixpoint``
+for exactly ``n_iter`` rounds.
 
 Edges must be SYMMETRIC (undirected), the connected_components input
 convention; pass both directions.
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 from osm_spark.graph.pagerank import vertex_ids
 
 
@@ -57,9 +57,7 @@ def label_propagation(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     )
 
-    labels = verts.select("id", F.col("id").alias("label"))
-    prev = None
-    for _ in range(n_iter):
+    def vote(labels: DataFrame) -> DataFrame:
         votes = (
             e.join(
                 labels.select(F.col("id").alias("s"), "label").hint(
@@ -77,7 +75,7 @@ def label_propagation(
                 )
             ).alias("w")
         )
-        new_labels = truncate_lineage(
+        return (
             verts.join(winner.hint("shuffle_hash"), "id", "left")
             .join(
                 labels.select("id", F.col("label").alias("_old")).hint(
@@ -90,9 +88,10 @@ def label_propagation(
                 F.coalesce(F.col("w.l"), F.col("_old")).alias("label"),
             )
         )
-        if prev is not None:
-            drop_truncated(prev)
-        prev, labels = labels, new_labels
 
+    labels, _ = fixpoint(
+        vote, verts.select("id", F.col("id").alias("label")), n_iter
+    )
     drop_truncated(e)
+    drop_truncated(verts)
     return labels

@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 
 SCALE = 10**12
 
@@ -77,6 +77,58 @@ def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
     )
 
 
+def _flows(
+    edges: DataFrame,
+    ranks: DataFrame,
+    src: str,
+    dst: str,
+    damping_num: int,
+    damping_den: int,
+    weight: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The half of an iteration that reads the rank leaf: the damped
+    dangling mass ``dang_sum`` as a 1-row scalar, and the per-target
+    contribution sum ``in_sum``. ``ranks`` carries the source's out-degree
+    (``out_deg``), or its out-weight (``w_out``) when ``weight`` names the
+    edge weight column."""
+    deg_col = "w_out" if weight else "out_deg"
+    w = f" * {weight}" if weight else ""
+    # every join hints shuffle_hash: at web scale these are all
+    # large-table equi-joins, and sort-merge would re-sort each side
+    # every iteration for no reuse (the output is consumed once)
+    #
+    # damped mass of dangling vertices, as a 1-row scalar — a scan-agg
+    # over the rank leaf, no join
+    dang = ranks.agg(
+        F.coalesce(
+            F.sum(F.when(F.col(deg_col).isNull(), F.col("r"))), F.lit(0)
+        ).alias("dang_sum")
+    )
+    # shuffle_hash: build on the small (vertex) side — an unhinted AQE
+    # plan may pick sort-merge and sort the EDGE side every iteration
+    # (the kNN phase-2 lesson, geo/knn.py:319)
+    contrib = (
+        edges.select(
+            F.col(src).alias("id"), F.col(dst).alias("_dst"), *([weight] if weight else [])
+        )
+        .join(
+            ranks.where(F.col(deg_col).isNotNull())
+            .select("id", "r", deg_col)
+            .hint("shuffle_hash"),
+            "id",
+        )
+        .select(
+            F.col("_dst").alias("id"),
+            F.expr(
+                f"({damping_num}L * r{w}) div ({damping_den}L * {deg_col})"
+            ).alias("c"),
+        )
+        .groupBy("id")
+        .agg(F.sum("c").alias("in_sum"))
+    )
+    return dang, contrib
+
+
 def _step(
     edges: DataFrame,
     verts: DataFrame,
@@ -88,9 +140,11 @@ def _step(
     damping_num: int,
     damping_den: int,
     base_num: int,
+    weight: str | None = None,
 ) -> DataFrame:
-    """One synchronous PageRank iteration (untruncated — the loop wraps
-    it in truncate_lineage; tests plan-audit this directly).
+    """One synchronous PageRank iteration (untruncated — the loop runs
+    it through ``fixpoint``; tests plan-audit this directly). With
+    ``weight``, ``deg`` is ``out_weights`` and mass splits by weight.
 
     ``ranks`` carries ``out_deg`` alongside ``r`` (attached once at
     init, re-attached in the output projection), so the iteration body
@@ -100,37 +154,7 @@ def _step(
     old form's ranks⋈deg appeared TWICE per round (the dangling and
     contribution branches each recomputed it; Catalyst does not
     deduplicate shared subtrees) and cost ~20% of the iteration."""
-    # every join below hints shuffle_hash: at web scale these are all
-    # large-table equi-joins, and sort-merge would re-sort each side
-    # every iteration for no reuse (the output is consumed once)
-    #
-    # damped mass of dangling vertices, as a 1-row scalar — a scan-agg
-    # over the rank leaf, no join
-    dang = ranks.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("out_deg").isNull(), F.col("r"))), F.lit(0)
-        ).alias("dang_sum")
-    )
-    # shuffle_hash: build on the small (vertex) side — an unhinted AQE
-    # plan may pick sort-merge and sort the EDGE side every iteration
-    # (the kNN phase-2 lesson, geo/knn.py:319)
-    contrib = (
-        edges.select(F.col(src).alias("id"), F.col(dst).alias("_dst"))
-        .join(
-            ranks.where(F.col("out_deg").isNotNull())
-            .select("id", "r", "out_deg")
-            .hint("shuffle_hash"),
-            "id",
-        )
-        .select(
-            F.col("_dst").alias("id"),
-            F.expr(
-                f"({damping_num}L * r) div ({damping_den}L * out_deg)"
-            ).alias("c"),
-        )
-        .groupBy("id")
-        .agg(F.sum("c").alias("in_sum"))
-    )
+    dang, contrib = _flows(edges, ranks, src, dst, damping_num, damping_den, weight)
     return (
         verts.join(contrib.hint("shuffle_hash"), "id", "left")
         .join(deg.hint("shuffle_hash"), "id", "left")
@@ -145,8 +169,22 @@ def _step(
                     f"({damping_num}L * dang_sum) div ({damping_den}L * n_v)"
                 )
             ).alias("r"),
-            "out_deg",
+            "w_out" if weight else "out_deg",
         )
+    )
+
+
+def _scaled(ranks: DataFrame, scale: int, n_iter: int, *tables: DataFrame) -> DataFrame:
+    """(id, rank_scaled, rank) from the final rank table. Once a round
+    has run, the rank leaf no longer reads the set-up ``tables`` (r0
+    does), so they are dropped."""
+    if n_iter:
+        for df in tables:
+            drop_truncated(df)
+    return ranks.select(
+        "id",
+        F.col("r").alias("rank_scaled"),
+        F.round(F.col("r") / float(scale), 12).alias("rank"),
     )
 
 
@@ -184,21 +222,15 @@ def pagerank(
     )
     base_num = (damping_den - damping_num) * scale
 
-    for _ in range(n_iter):
-        new_ranks = truncate_lineage(
-            _step(
-                edges, verts, deg, n_v, ranks,
-                src, dst, damping_num, damping_den, base_num,
-            )
-        )
-        drop_truncated(ranks)  # superseded round (no-op on the r0 plan)
-        ranks = new_ranks
-
-    return ranks.select(
-        "id",
-        F.col("r").alias("rank_scaled"),
-        F.round(F.col("r") / float(scale), 12).alias("rank"),
+    ranks, _ = fixpoint(
+        lambda ranks: _step(
+            edges, verts, deg, n_v, ranks,
+            src, dst, damping_num, damping_den, base_num,
+        ),
+        ranks,
+        n_iter,
     )
+    return _scaled(ranks, scale, n_iter, verts, deg, n_v)
 
 
 def _step_ppr(
@@ -219,28 +251,7 @@ def _step_ppr(
     Page et al. 1998 §2.6 personalization). ``verts`` carries is_seed ∈
     {0, 1}; is_seed multiplies the integer numerators, so non-seeds get
     exactly 0 with no branch."""
-    dang = ranks.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("out_deg").isNull(), F.col("r"))), F.lit(0)
-        ).alias("dang_sum")
-    )
-    contrib = (
-        edges.select(F.col(src).alias("id"), F.col(dst).alias("_dst"))
-        .join(
-            ranks.where(F.col("out_deg").isNotNull())
-            .select("id", "r", "out_deg")
-            .hint("shuffle_hash"),
-            "id",
-        )
-        .select(
-            F.col("_dst").alias("id"),
-            F.expr(
-                f"({damping_num}L * r) div ({damping_den}L * out_deg)"
-            ).alias("c"),
-        )
-        .groupBy("id")
-        .agg(F.sum("c").alias("in_sum"))
-    )
+    dang, contrib = _flows(edges, ranks, src, dst, damping_num, damping_den)
     return (
         verts.join(contrib.hint("shuffle_hash"), "id", "left")
         .join(deg.hint("shuffle_hash"), "id", "left")
@@ -322,21 +333,15 @@ def personalized_pagerank(
     )
     base_num = (damping_den - damping_num) * scale
 
-    for _ in range(n_iter):
-        new_ranks = truncate_lineage(
-            _step_ppr(
-                edges, verts, deg, n_s, ranks,
-                src, dst, damping_num, damping_den, base_num,
-            )
-        )
-        drop_truncated(ranks)
-        ranks = new_ranks
-
-    return ranks.select(
-        "id",
-        F.col("r").alias("rank_scaled"),
-        F.round(F.col("r") / float(scale), 12).alias("rank"),
+    ranks, _ = fixpoint(
+        lambda ranks: _step_ppr(
+            edges, verts, deg, n_s, ranks,
+            src, dst, damping_num, damping_den, base_num,
+        ),
+        ranks,
+        n_iter,
     )
+    return _scaled(ranks, scale, n_iter, verts, deg, n_s)
 
 
 def out_weights(
@@ -395,51 +400,12 @@ def weighted_pagerank(
     )
     base_num = (damping_den - damping_num) * scale
 
-    for _ in range(n_iter):
-        dang = ranks.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("w_out").isNull(), F.col("r"))), F.lit(0)
-            ).alias("dang_sum")
-        )
-        contrib = (
-            e.select(F.col("src").alias("id"), "dst", "w")
-            .join(
-                ranks.where(F.col("w_out").isNotNull())
-                .select("id", "r", "w_out")
-                .hint("shuffle_hash"),
-                "id",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                F.expr(
-                    f"({damping_num}L * r * w) div ({damping_den}L * w_out)"
-                ).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        new_ranks = truncate_lineage(
-            verts.join(contrib.hint("shuffle_hash"), "id", "left")
-            .join(wout.hint("shuffle_hash"), "id", "left")
-            .crossJoin(n_v)
-            .crossJoin(dang)
-            .select(
-                "id",
-                (
-                    F.expr(f"{base_num}L div ({damping_den}L * n_v)")
-                    + F.coalesce(F.col("in_sum"), F.lit(0))
-                    + F.expr(
-                        f"({damping_num}L * dang_sum) div ({damping_den}L * n_v)"
-                    )
-                ).alias("r"),
-                "w_out",
-            )
-        )
-        drop_truncated(ranks)
-        ranks = new_ranks
-
-    return ranks.select(
-        "id",
-        F.col("r").alias("rank_scaled"),
-        F.round(F.col("r") / float(scale), 12).alias("rank"),
+    ranks, _ = fixpoint(
+        lambda ranks: _step(
+            e, verts, wout, n_v, ranks,
+            "src", "dst", damping_num, damping_den, base_num, weight="w",
+        ),
+        ranks,
+        n_iter,
     )
+    return _scaled(ranks, scale, n_iter, verts, wout, n_v)

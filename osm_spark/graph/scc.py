@@ -8,10 +8,9 @@ propagation wants.
 
 Public algorithm family: the coloring / forward-backward method
 (Fleischer-Hendrickson-Pinar 2000; Orzan 2004; Hong et al. 2013),
-independently implemented on DataFrames with the engine's iterative
-protocol (lineage truncation per round, shuffle_hash-hinted joins,
-convergence folded into each round's own output — graph/components.py
-conventions).
+independently implemented on DataFrames: both floods run through
+``iterate.fixpoint``, with shuffle_hash-hinted joins and a changed flag
+on each round's output that the round's write counts.
 
 Outer round:
 
@@ -63,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 
 __all__ = ["strongly_connected_components", "bowtie_classes", "condensation_levels"]
 
@@ -73,9 +72,8 @@ def _fixpoint_min_color(
 ) -> DataFrame:
     """Flood min ids along edge direction to fixpoint (relax + pointer
     double per round). ``colors``: (id, c); returns the fixpoint."""
-    cur = colors
-    prev: DataFrame | None = None
-    for _ in range(max_prop):
+
+    def step(cur: DataFrame) -> DataFrame:
         relaxed = (
             edges.join(
                 cur.select(F.col("id").alias("src"), F.col("c").alias("sc")).hint(
@@ -93,22 +91,26 @@ def _fixpoint_min_color(
         # pointer double: c(v) ← min(c(v), c(c(v))) — valid by
         # transitivity of min-reachability (module docstring)
         jump = stepped.select(F.col("id").alias("c"), F.col("c").alias("jc"))
-        stepped = (
+        return (
             stepped.join(jump.hint("shuffle_hash"), "c", "left")
             .select("id", "_prev", F.least("c", "jc").alias("c"))
+            .withColumn("_chg", F.col("c") != F.col("_prev"))
+            .drop("_prev")
         )
-        new = truncate_lineage(
-            stepped.withColumn("_chg", F.col("c") != F.col("_prev")).drop("_prev")
-        )
-        changed = new.where("_chg").count()
-        if prev is not None:
-            drop_truncated(prev)
-        prev, cur = cur if cur is not colors else None, new
-        if changed == 0:
-            return cur
-    raise RuntimeError(
-        f"scc: min-coloring did not converge in max_prop={max_prop} rounds"
+
+    out, converged = fixpoint(
+        step, colors, max_prop, done=_settled, changed=F.count_if("_chg")
     )
+    if not converged:
+        drop_truncated(out)
+        raise RuntimeError(
+            f"scc: min-coloring did not converge in max_prop={max_prop} rounds"
+        )
+    return out
+
+
+def _settled(obs: dict, _: dict) -> bool:
+    return obs["changed"] == 0
 
 
 def strongly_connected_components(
@@ -135,72 +137,75 @@ def strongly_connected_components(
     )
     remaining_v = truncate_lineage(verts)
     remaining_e = e
-    assigned: DataFrame | None = None
-
-    for _ in range(max_rounds):
-        colors = _fixpoint_min_color(
-            remaining_e,
-            remaining_v.select("id", F.col("id").alias("c")),
-            max_prop,
-        )
-        cmap_s = colors.select(F.col("id").alias("src"), F.col("c").alias("c_src"))
-        cmap_d = colors.select(F.col("id").alias("dst"), F.col("c").alias("c_dst"))
-        same_color = truncate_lineage(
-            remaining_e.join(cmap_s.hint("shuffle_hash"), "src")
-            .join(cmap_d.hint("shuffle_hash"), "dst")
-            .where(F.col("c_src") == F.col("c_dst"))
-            .select("src", "dst")
-        )
-        back = _fixpoint_min_color(
-            same_color.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ),
-            remaining_v.select("id", F.col("id").alias("c")),
-            max_prop,
-        )
-        found = truncate_lineage(
-            colors.join(
-                back.select("id", F.col("c").alias("b")).hint("shuffle_hash"),
-                "id",
+    assigned = colors = same_color = back = found = None
+    try:
+        for _ in range(max_rounds):
+            colors = _fixpoint_min_color(
+                remaining_e,
+                remaining_v.select("id", F.col("id").alias("c")),
+                max_prop,
             )
-            .where(F.col("c") == F.col("b"))
-            .select("id", F.col("c").alias("scc"))
-        )
-        drop_truncated(same_color)
-        drop_truncated(colors)
-        drop_truncated(back)
-        # materialize the shrunken vertex set BEFORE found's files can
-        # be released by the assigned-merge below
-        new_v = truncate_lineage(
-            remaining_v.join(found.hint("shuffle_hash"), "id", "left_anti")
-        )
-        n_left = new_v.limit(1).count()
-        drop_truncated(remaining_v)
-        remaining_v = new_v
-        if assigned is None:
-            assigned = found
-        else:
-            new_assigned = truncate_lineage(assigned.unionByName(found))
-            drop_truncated(assigned)
-            drop_truncated(found)
-            assigned = new_assigned
-        if n_left == 0:
+            cmap_s = colors.select(F.col("id").alias("src"), F.col("c").alias("c_src"))
+            cmap_d = colors.select(F.col("id").alias("dst"), F.col("c").alias("c_dst"))
+            same_color = truncate_lineage(
+                remaining_e.join(cmap_s.hint("shuffle_hash"), "src")
+                .join(cmap_d.hint("shuffle_hash"), "dst")
+                .where(F.col("c_src") == F.col("c_dst"))
+                .select("src", "dst")
+            )
+            back = _fixpoint_min_color(
+                same_color.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                ),
+                remaining_v.select("id", F.col("id").alias("c")),
+                max_prop,
+            )
+            found = truncate_lineage(
+                colors.join(
+                    back.select("id", F.col("c").alias("b")).hint("shuffle_hash"),
+                    "id",
+                )
+                .where(F.col("c") == F.col("b"))
+                .select("id", F.col("c").alias("scc"))
+            )
+            for df in (same_color, colors, back):
+                drop_truncated(df)
+            # materialize the shrunken vertex set BEFORE found's files can
+            # be released by the assigned-merge below
+            new_v = truncate_lineage(
+                remaining_v.join(found.hint("shuffle_hash"), "id", "left_anti"),
+                n=F.count(F.lit(1)),
+            )
             drop_truncated(remaining_v)
+            remaining_v = new_v
+            if assigned is None:
+                assigned = found
+            else:
+                new_assigned = truncate_lineage(assigned.unionByName(found))
+                drop_truncated(assigned)
+                drop_truncated(found)
+                assigned = new_assigned
+            if new_v._observed["n"] == 0:
+                for df in (remaining_v, remaining_e):
+                    drop_truncated(df)
+                return assigned
+            keep_s = new_v.select(F.col("id").alias("src"))
+            keep_d = new_v.select(F.col("id").alias("dst"))
+            new_e = truncate_lineage(
+                remaining_e.join(keep_s.hint("shuffle_hash"), "src", "left_semi")
+                .join(keep_d.hint("shuffle_hash"), "dst", "left_semi")
+            )
             drop_truncated(remaining_e)
-            return assigned.select("id", "scc")
-        keep_s = new_v.select(F.col("id").alias("src"))
-        keep_d = new_v.select(F.col("id").alias("dst"))
-        new_e = truncate_lineage(
-            remaining_e.join(keep_s.hint("shuffle_hash"), "src", "left_semi")
-            .join(keep_d.hint("shuffle_hash"), "dst", "left_semi")
+            remaining_e = new_e
+        raise RuntimeError(
+            f"scc did not finish in max_rounds={max_rounds} outer rounds "
+            "(condensation chain longer than max_rounds; raise the guard)"
         )
-        drop_truncated(remaining_e)
-        remaining_e = new_e
-
-    raise RuntimeError(
-        f"scc did not finish in max_rounds={max_rounds} outer rounds "
-        "(condensation chain longer than max_rounds; raise the guard)"
-    )
+    except BaseException:
+        # every leaf this call made; dropping a released one is a no-op
+        for df in (remaining_e, remaining_v, assigned, colors, same_color, back, found):
+            drop_truncated(df)
+        raise
 
 
 def bowtie_classes(
@@ -230,7 +235,6 @@ def bowtie_classes(
     sccs = strongly_connected_components(
         edges, src=src, dst=dst, max_rounds=max_rounds, max_prop=max_prop
     )
-    sccs = truncate_lineage(sccs)
     head = (
         sccs.groupBy("scc")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -300,10 +304,8 @@ def condensation_levels(
     so the longest path is well-defined and the max-relax fixpoint
     below terminates in depth-many rounds (``max_prop``-guarded like
     every fold in this module)."""
-    sccs = truncate_lineage(
-        strongly_connected_components(
-            edges, src=src, dst=dst, max_rounds=max_rounds, max_prop=max_prop
-        )
+    sccs = strongly_connected_components(
+        edges, src=src, dst=dst, max_rounds=max_rounds, max_prop=max_prop
     )
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     cmap_s = sccs.select(F.col("id").alias("src"), F.col("scc").alias("s"))
@@ -317,11 +319,7 @@ def condensation_levels(
     )
     members = sccs.groupBy("scc").agg(F.count(F.lit(1)).alias("n_members"))
 
-    cur = truncate_lineage(
-        members.select("scc", F.lit(0).cast("long").alias("level"))
-    )
-    prev: DataFrame | None = None
-    for _ in range(max_prop):
+    def step(cur: DataFrame) -> DataFrame:
         relaxed = (
             cedges.join(
                 cur.select(F.col("scc").alias("s"), F.col("level").alias("sl")).hint(
@@ -332,7 +330,7 @@ def condensation_levels(
             .groupBy(F.col("t").alias("scc"))
             .agg((F.max("sl") + 1).alias("in_l"))
         )
-        new = truncate_lineage(
+        return (
             cur.join(relaxed.hint("shuffle_hash"), "scc", "left")
             .select(
                 "scc",
@@ -342,23 +340,25 @@ def condensation_levels(
             .withColumn("_chg", F.col("level") != F.col("_prev"))
             .drop("_prev")
         )
-        changed = new.where("_chg").count()
-        if prev is not None:
-            drop_truncated(prev)
-        prev, cur = cur, new
-        if changed == 0:
-            out = truncate_lineage(
-                cur.join(members.hint("shuffle_hash"), "scc").select(
-                    "scc", "level", "n_members"
-                )
-            )
-            drop_truncated(cur)
-            if prev is not None:
-                drop_truncated(prev)
-            drop_truncated(cedges)
-            drop_truncated(sccs)
-            return out
-    raise RuntimeError(
-        f"condensation_levels did not converge in max_prop={max_prop} "
-        "rounds — not a DAG? (impossible for a condensation; check input)"
+
+    levels, converged = fixpoint(
+        step,
+        members.select("scc", F.lit(0).cast("long").alias("level")),
+        max_prop,
+        done=_settled,
+        changed=F.count_if("_chg"),
     )
+    if converged:
+        out = truncate_lineage(
+            levels.join(members.hint("shuffle_hash"), "scc").select(
+                "scc", "level", "n_members"
+            )
+        )
+    for df in (levels, cedges, sccs):
+        drop_truncated(df)
+    if not converged:
+        raise RuntimeError(
+            f"condensation_levels did not converge in max_prop={max_prop} "
+            "rounds — not a DAG? (impossible for a condensation; check input)"
+        )
+    return out

@@ -25,14 +25,12 @@ independent of join/partition order. Negative weights are rejected
 (min-plus Bellman-Ford would need the full |V|−1 bound and cycle
 detection — not this operator's contract).
 
-Plan per round (the pagerank/CC iteration pattern, graph/iterate.py):
-one shuffle-hash edge join keyed by src + one map-side-combined min
+Plan per round (``iterate.fixpoint``, the pagerank/CC loop): one
+shuffle-hash edge join keyed by src + one map-side-combined min
 aggregate keyed by dst + one min merge with the previous frontier —
 shuffles carry (id, dist) pairs (16 bytes/vertex), never the edge
-payload twice. Rounds are lineage-truncated (plan and stats growth are
-the two measured iterative blow-ups, BENCH findings #11/#12) and
-superseded rounds are released two behind. Early exit on an exact
-integer fixpoint — one short-circuit count action per round.
+payload twice. Early exit on an exact integer fixpoint: the round's
+write counts its improved rows.
 
 Frontier optimization: the relaxation joins only rows IMPROVED in the
 previous round (the classic delta-stepping-lite trick) — on high-
@@ -46,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 
 
 def shortest_paths(
@@ -77,22 +75,17 @@ def shortest_paths(
     )
     e = truncate_lineage(e)
 
-    dist = truncate_lineage(
-        sources.select(F.col("id").cast("long").alias("id"))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-    )
-    frontier = dist  # rows improved last round — all sources initially
-
-    prev: DataFrame | None = None
-    for _ in range(max_hops):
+    def relax(state: DataFrame) -> DataFrame:
+        # the frontier: rows improved last round — all sources initially
+        frontier = state.where("improved")
         relaxed = (
             e.join(frontier.hint("shuffle_hash"), e["e_src"] == frontier["id"])
             .groupBy(F.col("e_dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("e_w")).alias("cand"))
         )
-        merged = (
-            dist.join(relaxed.hint("shuffle_hash"), "id", "full")
+        return (
+            state.select("id", "dist")
+            .join(relaxed.hint("shuffle_hash"), "id", "full")
             .select(
                 "id",
                 # least() skips NULLs (full join: exactly one side can be)
@@ -104,20 +97,18 @@ def shortest_paths(
                 ).alias("improved"),
             )
         )
-        new_all = truncate_lineage(merged)
-        new_frontier = new_all.where("improved").select("id", "dist")
-        n_improved = new_frontier.limit(1).count()
-        if prev is not None:
-            drop_truncated(prev)
-        prev, dist, frontier = dist, new_all.select("id", "dist"), new_frontier
-        if n_improved == 0:
-            break
 
-    out = dist
-    if prev is not None:
-        drop_truncated(prev)
+    dist, _ = fixpoint(
+        relax,
+        sources.select(F.col("id").cast("long").alias("id"))
+        .distinct()
+        .select("id", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("improved")),
+        max_hops,
+        done=lambda obs, _: obs["improved"] == 0,
+        improved=F.count_if("improved"),
+    )
     drop_truncated(e)
-    return out.select("id", "dist")
+    return dist.select("id", "dist")
 
 
 def reachability_zones(

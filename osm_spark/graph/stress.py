@@ -27,10 +27,12 @@ Construction (k landmarks, hop-bounded like the whole SSSP family):
 
 Scale: distances and counts ride ONE frame with k columns each (the
 landmarks.py layout — k is config, dozens at most); every round is one
-edge join + one aggregate; the only driver-side state is the k×k
-matrix. Path counts are exact int64 — at web scale σ can overflow
-int64 on pathological lattice graphs (2^63 paths); the operator keeps
-longs and documents the bound rather than paying decimal everywhere.
+edge join + one aggregate (a σ round adds a left join to the previous
+round, whose result is the round's change flag); the only driver-side
+state is the k×k matrix. Path counts are exact int64 — at web scale σ
+can overflow int64 on pathological lattice graphs (2^63 paths); the
+operator keeps longs and documents the bound rather than paying decimal
+everywhere.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 from osm_spark.graph.landmarks import landmark_distances
 
 __all__ = ["landmark_stress"]
@@ -100,9 +102,8 @@ def _sigma(
     seeds = spark.createDataFrame(
         seed_rows, "id long, " + ", ".join(f"{c} long" for c in scols)
     )
-    cur = truncate_lineage(seeds)
-    prev: DataFrame | None = None
-    for _ in range(max_hops):
+
+    def count_paths(cur: DataFrame) -> DataFrame:
         contrib = (
             dag.join(
                 cur.select(
@@ -142,28 +143,28 @@ def _sigma(
                 ],
             )
         )
-        new = truncate_lineage(merged)
-        same = (
-            new.alias("n")
-            .join(cur.alias("o"), "id", "full")
-            .where(
-                " OR ".join(
-                    f"(coalesce(n.{c}, -1) <> coalesce(o.{c}, -1))"
-                    for c in scols
-                )
-            )
-            .limit(1)
-            .count()
+        # the change flag rides the round's output: the previous round's
+        # rows never disappear (every row's sources stay in the next
+        # round's join), so a left join meets each of them
+        old = cur.select(
+            "id", *[F.col(c).alias(f"_o{i}") for i, c in enumerate(scols)]
         )
-        if prev is not None:
-            drop_truncated(prev)
-        prev, cur = cur, new
-        if same == 0:
-            break
+        chg = F.col("_o0").isNull()
+        for i, c in enumerate(scols):
+            chg = chg | (F.col(c) != F.col(f"_o{i}"))
+        return merged.join(old.hint("shuffle_hash"), "id", "left").select(
+            "id", *scols, chg.alias("_chg")
+        )
+
+    sigma, _ = fixpoint(
+        count_paths,
+        seeds,
+        max_hops,
+        done=lambda obs, _: obs["changed"] == 0,
+        changed=F.count_if("_chg"),
+    )
     drop_truncated(dag)
-    if prev is not None and prev is not cur:
-        drop_truncated(prev)
-    return cur
+    return sigma
 
 
 def landmark_stress(

@@ -99,18 +99,25 @@ def ewma_smooth(
     like ``rollup_anomalies`` and replays in any engine with LAG.
     Row-based frames make warm-up explicit (``n_used``); run it over
     ``gap_fill`` output when the time axis must be regular.
+
+    Values must satisfy |val| ≤ 2^40 (≈1.1·10^12 micro-units). The
+    numerator is at most the weight sum base^W − (base−1)^W times that
+    bound, so ``window`` and ``k`` are rejected when the product passes
+    the bigint range (k = 1 allows window ≤ 23).
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if k * (window - 1) > 40:
+    base, decay = 2 ** k, 2 ** k - 1
+    # Σ_j w_j = base^W − decay^W (geometric, base − decay = 1); the
+    # numerator Σ_j w_j·x_j stays within it times max |x| = 2^40
+    if (base ** window - decay ** window) << 40 > 2 ** 63 - 1:
         raise ValueError(
-            f"k*(window-1) = {k * (window - 1)} > 40: integer weights "
-            "would overflow the bigint headroom — lower window or k"
+            f"window={window}, k={k}: the weight sum times 2^40 (the largest "
+            "|value| allowed) overflows a bigint — lower window or k"
         )
     w = Window.partitionBy(key_col).orderBy(bucket_col)
-    base, decay = 2 ** k, 2 ** k - 1
     x = F.col(val_col).cast("long")
 
     num = F.lit(0).cast("long")

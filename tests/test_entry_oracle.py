@@ -103,3 +103,23 @@ def test_cc_query_matches_oracle_on_both_rungs(spark, duck, sf_med_dir, name, on
     calls = rung(on)
     test_query_matches_oracle(spark, duck, sf_med_dir, name)
     assert (len(calls) > 0) == on, len(calls)
+
+
+def test_st_dbscan_gates_real_core_pairs(spark, sf_med_dir, rung, monkeypatch):
+    """At sf0.01 st_dbscan hands connected components real core-core
+    pairs: the raw-pair write observes n > 0, so the gate above checks
+    both rungs on a graph, not on the empty input."""
+    import osm_spark.graph.components as components
+
+    seen = []
+    truncate = components.truncate_lineage
+
+    def spy(df, **observe):
+        out = truncate(df, **observe)
+        seen.append(out._observed)
+        return out
+
+    monkeypatch.setattr(components, "truncate_lineage", spy)
+    calls = rung(True)
+    entrymod.queries()["st_dbscan_clusters"](spark, sf_med_dir).collect()
+    assert len(calls) == 1 and seen[0]["n"] > 0, seen

@@ -71,3 +71,17 @@ def test_ewma_validation(spark):
         ewma_smooth(df, k=0)
     with pytest.raises(ValueError):
         ewma_smooth(df, window=42, k=1)
+
+
+@pytest.mark.parametrize("k, w_max", [(1, 23), (2, 11)])
+def test_ewma_overflow_guard_at_its_edge(spark, k, w_max):
+    """The weight sum times the documented max |value| (2^40) must fit a
+    bigint: the last window inside computes exactly at ±2^40, one more
+    lag raises."""
+    top = 2**40
+    rows = [("p", b, top) for b in range(w_max + 2)] + [("n", b, -top) for b in range(w_max + 2)]
+    df = spark.createDataFrame(rows, "key string, bucket long, sum_micro long")
+    got = {(r.key, r.ewma_micro) for r in ewma_smooth(df, window=w_max, k=k).collect()}
+    assert got == {("p", top), ("n", -top)}
+    with pytest.raises(ValueError, match="overflows a bigint"):
+        ewma_smooth(df, window=w_max + 1, k=k)

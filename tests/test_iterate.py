@@ -11,10 +11,19 @@ overflow).
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
-from osm_spark.graph.iterate import drop_truncated, truncate_lineage
+import osm_spark.graph.components as components
+import osm_spark.graph.kcore as kcore
+import osm_spark.graph.ktruss as ktruss
+import osm_spark.graph.landmarks as landmarks
+import osm_spark.graph.scc as scc
+import osm_spark.graph.sssp as sssp
+import osm_spark.graph.stress as stress
+from osm_spark.graph.iterate import drop_truncated, fixpoint, truncate_lineage
 
 
 def _optimized(df):
@@ -134,3 +143,205 @@ def test_arrow_leaf_is_a_droppable_leaf(spark):
     assert os.path.isdir(path)
     drop_truncated(out)
     assert not os.path.exists(path)
+
+
+# ------------------------------------------------------------- fixpoint
+
+
+@pytest.fixture
+def leaves(spark, tmp_path):
+    """Truncations land under a ``tmp_path`` checkpoint dir; the fixture
+    returns a function listing the ``t-*`` leaves present there."""
+    sc = spark.sparkContext
+    prev = sc._jsc.sc().checkpointDir()  # Scala Option; no public reset
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    root = sc.getCheckpointDir().removeprefix("file:")
+    try:
+        yield lambda: {n for n in os.listdir(root) if n.startswith("t-")}
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(prev)
+
+
+def _leaves_of(df) -> set[str]:
+    """The truncation leaves a frame reads."""
+    return {
+        os.path.basename(os.path.dirname(urlparse(f).path)) for f in df.inputFiles()
+    }
+
+
+def _plus_one(df):
+    return df.select("id", (F.col("x") + 1).alias("x"))
+
+
+def test_fixpoint_runs_max_iter_rounds_and_drops_superseded(spark, leaves):
+    init = truncate_lineage(spark.range(4).select("id", F.lit(0).alias("x")))
+    seen = []
+
+    def step(df):
+        seen.append(df)
+        return _plus_one(df)
+
+    out, converged = fixpoint(step, init, 3)
+    assert converged and [r.x for r in out.collect()] == [3] * 4
+    assert seen[0] is init and len(seen) == 3
+    # the caller's initial state stays; every superseded round is gone
+    assert leaves() == _leaves_of(init) | _leaves_of(out)
+    unchanged, converged = fixpoint(step, init, 0)
+    assert unchanged is init and converged
+    for df in (init, out):
+        drop_truncated(df)
+
+
+def test_fixpoint_done_reads_observed_values(spark, leaves):
+    init = spark.range(4).select("id", F.lit(0).alias("x"))
+    calls = []
+
+    def done(new, old):
+        calls.append((new, old))
+        return new["top"] == 2
+
+    out, converged = fixpoint(_plus_one, init, 10, done=done, top=F.max("x"))
+    assert converged and out._observed == {"top": 2}
+    assert calls == [({"top": 1}, {}), ({"top": 2}, {"top": 1})]
+    assert leaves() == _leaves_of(out)
+    # a bound hit before ``done`` holds: the last state, not converged
+    last, converged = fixpoint(_plus_one, init, 2, done=lambda new, old: False, top=F.max("x"))
+    assert not converged and last._observed == {"top": 2}
+    assert leaves() == _leaves_of(out) | _leaves_of(last)
+    for df in (out, last):
+        drop_truncated(df)
+
+
+def test_fixpoint_cleans_up_when_a_round_raises(spark, leaves):
+    init = truncate_lineage(spark.range(4).select("id", F.lit(0).alias("x")))
+    before = leaves()
+
+    def failing_write(df):
+        # the third round's write fails inside Spark
+        return df.select(
+            "id",
+            F.when(F.col("x") < 2, F.col("x") + 1)
+            .otherwise(F.raise_error(F.lit("boom")).cast("int"))
+            .alias("x"),
+        )
+
+    with pytest.raises(Exception, match="boom"):
+        fixpoint(failing_write, init, 5)
+    assert leaves() == before
+
+    def failing_step(df):
+        if df.first().x == 2:
+            raise KeyError("boom")
+        return _plus_one(df)
+
+    with pytest.raises(KeyError):
+        fixpoint(failing_step, init, 5)
+    assert leaves() == before
+    drop_truncated(init)
+
+
+# ------------------------------------------- the loops built on fixpoint
+
+PATH40 = [(i, i + 1) for i in range(40)]
+# a 12-edge chain peels from both ends; the triangle survives as the 2-core
+CHAIN12 = [(i, i + 1) for i in range(12)] + [(100, 101), (101, 102), (100, 102)]
+# K4 with a pendant triangle and a tail: at k=4 the K4 is the truss
+CASCADE = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4), (3, 5), (4, 5), (5, 6), (6, 7)]
+CYCLE8 = [(i + 1, i) for i in range(7)] + [(0, 7)]  # floods against the ids
+UP4 = [(i, i + 1) for i in range(4)]  # one singleton SCC per outer round
+DOWN8 = [(i + 1, i) for i in range(8)]  # one outer round, 9 levels
+WEIGHTED = [(1, 2, 10), (2, 3, 5), (3, 1, 1), (2, 4, 2), (4, 5, 7), (5, 4, 7), (3, 6, 100)]
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "src long, dst long")
+
+
+def _weighted(spark):
+    return spark.createDataFrame(WEIGHTED, "src long, dst long, w long")
+
+
+# name: (edges, run(df, with a bound too small to converge))
+GUARD_LOOPS = {
+    "connected_components": (
+        PATH40,
+        lambda df, tight: components.connected_components(df, "src", "dst", max_iter=1 if tight else 50),
+    ),
+    "kcore": (CHAIN12, lambda df, tight: kcore.kcore(df, 2, max_iter=2 if tight else 50)),
+    "ktruss": (CASCADE, lambda df, tight: ktruss.ktruss(df, 4, max_iter=1 if tight else 50)),
+    "scc_min_color": (
+        CYCLE8,
+        lambda df, tight: scc.strongly_connected_components(df, max_prop=2 if tight else 100),
+    ),
+    "scc_outer": (
+        UP4,
+        lambda df, tight: scc.strongly_connected_components(df, max_rounds=2 if tight else 20),
+    ),
+    "condensation_levels": (
+        DOWN8,
+        lambda df, tight: scc.condensation_levels(df, max_prop=3 if tight else 100),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(GUARD_LOOPS))
+def test_guard_loops_leave_no_leaf_behind(spark, leaves, rung, name):
+    """A guard loop that raises leaves no truncation behind; one that
+    converges leaves only the leaves its result reads."""
+    rung(False)  # connected components: the distributed loop
+    pairs, run = GUARD_LOOPS[name]
+    df = _edges(spark, pairs)
+    before = leaves()
+    with pytest.raises(RuntimeError, match="did not"):
+        run(df, True)
+    assert leaves() == before
+    out = run(df, False)
+    assert out.count() > 0
+    assert leaves() - before == _leaves_of(out)
+
+
+# name: (module whose fixpoint runs the loop, call)
+ROUND_LOOPS = {
+    "connected_components": (
+        components,
+        lambda s: components.connected_components(_edges(s, PATH40), "src", "dst"),
+    ),
+    "kcore": (kcore, lambda s: kcore.kcore(_edges(s, CHAIN12), 2)),
+    "ktruss": (ktruss, lambda s: ktruss.ktruss(_edges(s, CASCADE), 4)),
+    # the min-coloring floods, then the condensation levels
+    "scc": (
+        scc,
+        lambda s: scc.condensation_levels(
+            _edges(s, [(0, 1), (1, 2), (2, 3), (3, 0), (3, 10), (10, 11)])
+        ),
+    ),
+    "sssp": (
+        sssp,
+        lambda s: sssp.shortest_paths(_weighted(s), s.createDataFrame([(1,)], "id long"), 6),
+    ),
+    "landmarks": (landmarks, lambda s: landmarks.landmark_distances(_weighted(s), [1, 4], 6)),
+    "stress": (stress, lambda s: stress.landmark_stress(_weighted(s), [1, 4], 6)),
+}
+
+
+@pytest.mark.parametrize("name", list(ROUND_LOOPS))
+def test_loop_round_launches_only_its_write(spark, tmp_path, count_jobs, monkeypatch, rung, name):
+    """Convergence is read from the round's own write: one ``fixpoint``
+    round of each loop launches exactly the jobs of a plain parquet write
+    of that round's frame (no count job, nothing run while building it)."""
+    rung(False)
+    module, call = ROUND_LOOPS[name]
+    seen = []
+
+    def spy(step, state, max_iter, *, done=None, **observe):
+        frame = step(state)
+        path = str(tmp_path / f"plain-{len(seen)}")
+        _, plain = count_jobs(lambda: frame.write.parquet(path))
+        (one, _), jobs = count_jobs(lambda: fixpoint(step, state, 1, done=done, **observe))
+        drop_truncated(one)
+        seen.append((jobs, plain))
+        return fixpoint(step, state, max_iter, done=done, **observe)
+
+    monkeypatch.setattr(module, "fixpoint", spy)
+    call(spark).collect()
+    assert seen and all(jobs == plain > 0 for jobs, plain in seen), seen

@@ -79,3 +79,18 @@ def test_kcore_rejects_bad_k(spark):
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
     with pytest.raises(ValueError):
         kcore(df, 0)
+
+
+# Smallest converging max_iter on the peel chain below, measured before
+# the convergence count moved onto each round's write (it was a separate
+# count job): observing it must add or drop no round.
+KCORE_CHAIN_ROUNDS = 7
+
+
+def test_kcore_smallest_max_iter_pinned(spark):
+    # the 12-chain peels two edges a round (6 rounds to empty), then one
+    # round sees the triangle unchanged
+    path = [(i, i + 1) for i in range(12)] + [(100, 101), (101, 102), (100, 102)]
+    assert _run(spark, path, 2, max_iter=KCORE_CHAIN_ROUNDS) == {100: 2, 101: 2, 102: 2}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _run(spark, path, 2, max_iter=KCORE_CHAIN_ROUNDS - 1)

@@ -78,3 +78,31 @@ def test_affine_fixture_matches_python(spark):
 def test_k_validation(spark):
     with pytest.raises(ValueError):
         ktruss(_edges(spark, [(1, 2)]), k=1)
+
+def _tube(length: int, ring: int = 5):
+    """A triangulated cylinder: every edge lies in two triangles except
+    the two boundary rings' edges, so at k=4 it peels one ring a round
+    from each end."""
+    v = lambda layer, j: layer * ring + j % ring  # noqa: E731
+    pairs = []
+    for layer in range(length + 1):
+        for j in range(ring):
+            pairs.append((v(layer, j), v(layer, j + 1)))
+            if layer < length:
+                pairs += [(v(layer, j), v(layer + 1, j)), (v(layer, j), v(layer + 1, j + 1))]
+    return pairs
+
+
+# Smallest converging max_iter on the tube + K5 below, measured before the
+# convergence count moved onto each round's write (it was a separate count
+# job): observing it must add or drop no round.
+KTRUSS_TUBE_ROUNDS = 7
+
+
+def test_ktruss_smallest_max_iter_pinned(spark):
+    pairs = _tube(5) + [(1000 + a, 1000 + b) for a, b in combinations(range(5), 2)]
+    df = _edges(spark, pairs)
+    # the tube peels away entirely; the K5 is the 4-truss
+    assert _collect(ktruss(df, k=4, max_iter=KTRUSS_TUBE_ROUNDS)) == _py_truss(pairs, 4)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        ktruss(df, k=4, max_iter=KTRUSS_TUBE_ROUNDS - 1)
