@@ -7,11 +7,13 @@ semantics. Reference analog: the way polygons this ranks are the
 assembled `lib/osm/way.rb` rings (SURVEY.md §1.4); the pick itself is
 Spark-first composition.
 
-Plan shape: ``pip_join`` (auto broadcast/salted — the 10^12-point side
-never shuffles on the broadcast path) produces (url, way_id) pairs;
-``way_geometry_stats`` computes each polygon's area once over the
-polygon DIM (zero-shuffle codegen folds); areas broadcast back onto the
-pairs; the per-point argmin runs as one partial-aggregated ``min(struct
+Plan shape: the PIP join's one strategy ladder
+(``spatial_join._pip_candidates``: flat broadcast → adaptive mixed-res
+broadcast → salted; the 10^12-point side never shuffles on the
+broadcast rungs) produces (url, way_id) pairs; ``way_geometry_stats``
+computes each polygon's area once over the polygon DIM (zero-shuffle
+codegen folds); the areas attach to the pairs the way the prejoin went;
+the per-point argmin runs as one partial-aggregated ``min(struct
 (area_m2, way_id, ...))`` — a map-side-combined shuffle of one row per
 point per partition, never a window over the pair list.
 
@@ -27,12 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo.measure import way_geometry_stats
-from osm_spark.pipeline.spatial_join import (
-    BROADCAST_MAX_CELLS,
-    attach_polygon_dim,
-    estimate_covering_cells,
-    pip_join,
-)
+from osm_spark.pipeline.spatial_join import _attach_way_dim, _pip_pairs
 
 
 def reverse_geocode(
@@ -44,78 +41,15 @@ def reverse_geocode(
 ) -> DataFrame:
     """(url, way_id) — the smallest-area polygon covering each point;
     points covered by no polygon are absent (semantics of a geocoder
-    miss). ``strategy`` is resolved ONCE here (same estimate ladder as
-    ``pip_join``'s auto) and governs both the PIP prejoin and the area
-    attach: the area dim is one row per polygon, so when the polygon
-    side outgrew the broadcast ceiling the areas hash-join on way_id
-    instead of broadcasting (10^8 ways × 16 B is past any sane
-    broadcast — the same reasoning as the vertex dim), two-side-salted
-    by the same way-level factors (BENCH.md finding #15).
-
-    With no ``way_cells``, auto climbs ``pip_join``'s ladder: flat
-    broadcast → adaptive mixed-res broadcast (the area dim has ≤ one
-    row per covering row, so it broadcasts whenever the adaptive
-    covering does) → adaptive salted (the area attach inherits the
-    multi-level way salts)."""
-    from osm_spark.pipeline.spatial_join import (
-        _adaptive_candidates,
-        _refine_pip_expr,
-    )
-
+    miss). ``strategy``/``budget`` are ``pip_join``'s. The area dim
+    attaches with the same per-way salts as the vertex dim: it is one
+    row per polygon, so when the polygon side outgrew the broadcast
+    ceiling the areas hash-join on way_id instead of broadcasting
+    (10^8 ways × 16 B is past any sane broadcast), two-side-salted by
+    the same way-level factors (BENCH.md finding #15)."""
+    pairs, way_salts = _pip_pairs(points, polygons, way_cells, strategy, budget)
     areas = way_geometry_stats(polygons).select("way_id", "area_m2")
-    vx = polygons.select("way_id", "vlat", "vlon")
-    if way_cells is None and strategy == "auto":
-        from osm_spark.pipeline.geometry import build_way_cells_adaptive
-
-        if estimate_covering_cells(polygons) > BROADCAST_MAX_CELLS:
-            index = build_way_cells_adaptive(polygons, budget=budget)
-            fits = (
-                estimate_covering_cells(polygons, cap=budget)
-                <= BROADCAST_MAX_CELLS
-            )
-            cand, way_salts = _adaptive_candidates(
-                points, index, "broadcast" if fits else "salted", None
-            )
-            if way_salts is None:
-                cand = attach_polygon_dim(cand, vx, "way_id", "broadcast")
-                pairs = _refine_pip_expr(cand)
-                scored = attach_polygon_dim(pairs, areas, "way_id", "broadcast")
-            else:
-                cand = attach_polygon_dim(
-                    cand, vx, "way_id", "shuffle", way_salts=way_salts
-                )
-                pairs = _refine_pip_expr(cand)
-                scored = attach_polygon_dim(
-                    pairs, areas, "way_id", "shuffle", way_salts=way_salts
-                )
-            return _pick_smallest(scored)
-        strategy = "broadcast"
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if estimate_covering_cells(polygons) <= BROADCAST_MAX_CELLS
-            else "salted"
-        )
-    pairs = pip_join(points, polygons, way_cells, strategy=strategy)
-    if strategy == "broadcast":
-        scored = attach_polygon_dim(pairs, areas, "way_id", "broadcast")
-    else:
-        # shuffle attach, two-side-salted: a hot cell's point mass lands
-        # on its containing polygons' ids, so the area join inherits the
-        # same way-level split factors the vertex attach uses
-        from osm_spark.pipeline.geometry import build_way_cells
-        from osm_spark.pipeline.spatial_join import salt_plan, way_salt_plan
-
-        if way_cells is None:
-            way_cells = build_way_cells(polygons)
-        scored = attach_polygon_dim(
-            pairs,
-            areas,
-            "way_id",
-            "shuffle",
-            way_salts=way_salt_plan(way_cells, salt_plan(points)),
-        )
-    return _pick_smallest(scored)
+    return _pick_smallest(_attach_way_dim(pairs, areas, way_salts))
 
 
 def _pick_smallest(scored: DataFrame) -> DataFrame:

@@ -57,7 +57,6 @@ from osm_spark.geo.hexgrid import (
     hex_disk_expr,
 )
 from osm_spark.pipeline.spatial_join import (
-    BROADCAST_MAX_CELLS,
     HOT_CELL_TARGET,
     attach_polygon_dim,
     pip_cover_expr,
@@ -180,12 +179,6 @@ def expand_covering(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def overlay_strategy(n_cells_smaller: int) -> str:
-    """Broadcast the smaller covering while it fits the same cell-count
-    ceiling ``pip_join`` uses; shuffle-hash on the cell past it."""
-    return "broadcast" if n_cells_smaller <= BROADCAST_MAX_CELLS else "shuffle"
 
 
 def overlay_salt_plan(

@@ -89,7 +89,7 @@ def tile_refresh(base: DataFrame, delta: DataFrame) -> DataFrame:
     the difference between touching the day's CDC batch and rescanning
     the corpus: the only exchange is the full-outer equi-join on the
     tile key — and when ``base`` is stored bucketed by (z, x, y)
-    (pipeline/bucketing.py), only the delta side shuffles.
+    (``DataFrameWriter.bucketBy``), only the delta side shuffles.
     """
     j = base.join(delta.hint("shuffle_hash"), ["z", "x", "y"], "full_outer")
     n2 = F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("delta"), F.lit(0))

@@ -103,6 +103,9 @@ def hits(
         new_auth = truncate_lineage(_normalize(a_all, "a", scale))
         drop_truncated(auth)
         auth = new_auth
+    # the result reads only the hub/auth leaves
+    drop_truncated(verts)
+    drop_truncated(e)
 
     return (
         hub.join(auth, "id")

@@ -63,18 +63,22 @@ def landmark_distances(
         raise ValueError(f"landmarks must be distinct, got {landmarks}")
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    neg = edges.where(F.col(weight) < 0).limit(1).count()
-    if neg:
-        raise ValueError("landmark_distances requires non-negative weights")
 
     k = len(landmarks)
     cols = [f"_d{i}" for i in range(k)]
     e = edges.select(
         F.col(src).alias("e_src"),
         F.col(dst).alias("e_dst"),
-        F.col(weight).cast("long").alias("e_w"),
+        # a negative weight lands as -1, so the write's count sees it
+        # even where the cast would truncate it to 0 (-0.5)
+        F.when(F.col(weight) < 0, F.lit(-1))
+        .otherwise(F.col(weight).cast("long"))
+        .alias("e_w"),
     )
-    e = truncate_lineage(e)
+    e = truncate_lineage(e, neg=F.count_if(F.col("e_w") < 0))
+    if e._observed["neg"]:
+        drop_truncated(e)
+        raise ValueError("landmark_distances requires non-negative weights")
 
     spark = edges.sparkSession
     seed_rows = [

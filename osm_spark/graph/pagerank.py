@@ -37,17 +37,18 @@ rank table twice (contributions + dangling mass), so an untruncated
 plan doubles per iteration; vertex/degree tables are materialized once
 up front instead of being recomputed from the edge list every round.
 
-**Bucket the edge table by ``src``** (pipeline/bucketing.py) before
-calling: a plain parquet edge list has no partitioning Catalyst can
-see, so EVERY iteration re-exchanges all |E| edge rows into the
-contribution join. A bucketed scan exposes HashPartitioning(src), the
-per-iteration ShuffledHashJoin consumes it with no Exchange above the
-edge scan (pinned by tests/test_plans.py), and iteration shuffle
-volume drops from O(|E|) to O(|V|) — at a trillion-edge web graph the
-difference between reshuffling the crawl every round and reshuffling
-one rank column. Bucket count must equal the iteration shuffle width
-(``spark.sql.shuffle.partitions``): on a mismatch Catalyst's
-DisableUnnecessaryBucketedScan re-exchanges anyway.
+**Bucket the edge table by ``src``** (``DataFrameWriter.bucketBy`` +
+``saveAsTable``) before calling: a plain parquet edge list has no
+partitioning Catalyst can see, so EVERY iteration re-exchanges all |E|
+edge rows into the contribution join. A bucketed scan exposes
+HashPartitioning(src), the per-iteration ShuffledHashJoin consumes it
+with no Exchange above the edge scan (pinned by tests/test_plans.py),
+and iteration shuffle volume drops from O(|E|) to O(|V|) — at a
+trillion-edge web graph the difference between reshuffling the crawl
+every round and reshuffling one rank column. Bucket count must equal
+the iteration shuffle width (``spark.sql.shuffle.partitions``): on a
+mismatch Catalyst's DisableUnnecessaryBucketedScan re-exchanges
+anyway.
 """
 
 from __future__ import annotations

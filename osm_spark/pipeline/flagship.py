@@ -15,15 +15,10 @@ from osm_spark.pipeline.geometry import build_way_cells, synth_polygons
 from osm_spark.pipeline.lineage import LineageLog
 from osm_spark.pipeline.pages import synth_pages
 from osm_spark.pipeline.spatial_join import (
-    BROADCAST_MAX_CELLS,
-    attach_polygon_dim,
-    estimate_covering_cells,
+    _attach_way_dim,
+    _pip_pairs,
     extract_points,
     pip_join,
-    pip_join_broadcast,
-    pip_join_salted,
-    salt_plan,
-    way_salt_plan,
 )
 from osm_spark.geo.contours import tile_density
 
@@ -32,32 +27,16 @@ def flagship_query(spark: SparkSession, sf_dir: str, multiplier: int = 1) -> Dat
     """Un-checkpointed flagship PIP join (url, way_id, name) — the
     ``__spark_entry__.entry`` surface.
 
-    The strategy is resolved ONCE (same covering estimate as
-    ``pip_join``'s auto) and governs both the PIP prejoin and the name
-    attach: the name dim is one short row per polygon, but at the
-    10^8-way design point that is still GBs — past any broadcast — so
-    on the salted path it rides the same two-side-salted shuffle attach
-    as the vertex dim (one salt_plan job, shared by both)."""
+    The name dim attaches with the PIP join's own per-way salts: it is
+    one short row per polygon, but at the 10^8-way design point that is
+    still GBs — past any broadcast — so on the salted path it rides the
+    same two-side-salted shuffle attach as the vertex dim."""
     pages = synth_pages(spark, sf_dir, multiplier)
     points = extract_points(pages)
     polygons = synth_polygons(spark)
     names = polygons.select("way_id", F.col("tags")["name"].alias("name"))
-    strategy = (
-        "broadcast"
-        if estimate_covering_cells(polygons) <= BROADCAST_MAX_CELLS
-        else "salted"
-    )
-    way_cells = build_way_cells(polygons)
-    if strategy == "broadcast":
-        pairs = pip_join_broadcast(points, polygons, way_cells)
-        out = pairs.join(F.broadcast(names), "way_id")
-    else:
-        salts = salt_plan(points)
-        pairs = pip_join_salted(points, polygons, way_cells, salts)
-        out = attach_polygon_dim(
-            pairs, names, "way_id", "shuffle",
-            way_salts=way_salt_plan(way_cells, salts),
-        )
+    pairs, way_salts = _pip_pairs(points, polygons, build_way_cells(polygons), "auto")
+    out = _attach_way_dim(pairs, names, way_salts)
     return out.select("url", "way_id", "name")
 
 

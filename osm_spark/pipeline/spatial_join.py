@@ -12,8 +12,18 @@ filter-then-refine decomposition):
    shuffle hash join with **explicit per-cell salting** for hot cells
    (north_rule requires explicit skew handling: AQE splits oversized
    shuffle blocks, but only salting spreads a single hot *key*).
-3. **refine**: exact ray-cast PIP as a codegen Column expression over
+3. **attach**: the polygon vertex dim joins the candidates the way the
+   prejoin went (broadcast, or two-side-salted on way_id).
+4. **refine**: exact ray-cast PIP as a codegen Column expression over
    the candidate pairs (``pip_cover_expr``).
+
+One strategy ladder serves every PIP entry point: ``_pip_candidates``
+alone compares the covering estimate with ``BROADCAST_MAX_CELLS``,
+picks flat broadcast / adaptive mixed-resolution broadcast / salted,
+runs the prejoin and returns the per-way salts. ``pip_join``, its three
+fixed-strategy forms, ``pip_join_multipolygon``,
+``geo.geocode.reverse_geocode`` and ``flagship.flagship_query`` each add
+only their own polygon dims on top, attached with those salts.
 
 At the 10^12-row design point the pages side never shuffles in the
 broadcast path — the only wide exchange is the final aggregation, and
@@ -157,23 +167,16 @@ def _refine_pip_expr(candidates: DataFrame) -> DataFrame:
 def pip_join_broadcast(
     points: DataFrame, polygons: DataFrame, way_cells: DataFrame
 ) -> DataFrame:
-    """Broadcast prejoin path: points never shuffle.
-
-    Join covering cells (broadcast), then attach polygon vertices
-    (broadcast), then exact refine. Output (url, way_id), distinct pairs.
+    """Broadcast prejoin path: points never shuffle. Join covering cells
+    (broadcast), attach polygon vertices (broadcast), exact refine.
 
     No persist on points: the extraction's Generate barriers already pin
-    the regex and the parse to one evaluation per row (per-candidate
-    re-evaluation cannot happen), and DataFrame cache materialization
-    measured 10× slower than the recompute at local[32] (block-store
-    write contention). On a cluster the durable form of this barrier is
-    the checkpointed page_points stage (lineage.py).
-    """
-    cand = points.join(
-        F.broadcast(way_cells), points["h3_9"] == way_cells["cell"], "inner"
-    ).select("url", "lat", "lon", "way_id")
-    cand = cand.join(F.broadcast(polygons.select("way_id", "vlat", "vlon")), "way_id")
-    return _refine_pip_expr(cand)
+    the regex and the parse to one evaluation per row, and DataFrame
+    cache materialization measured 10× slower than the recompute at
+    local[32] (block-store write contention). On a cluster the durable
+    form of this barrier is the checkpointed page_points stage
+    (lineage.py)."""
+    return _pip_pairs(points, polygons, way_cells, "broadcast")[0]
 
 
 def salt_plan(points: DataFrame, target: int = HOT_CELL_TARGET) -> DataFrame:
@@ -202,10 +205,7 @@ def _prejoin_salted(
 
     Points in a hot cell scatter across k salt buckets; the covering rows
     for that cell replicate into all k buckets (small side pays the
-    replication). Join key becomes (cell, salt). Shared by the single-
-    polygon and multipolygon joins — the covering table is the only thing
-    that differs.
-    """
+    replication). Join key becomes (cell, salt)."""
     pts = points.join(F.broadcast(salts), points["h3_9"] == salts["cell"], "left")
     pts = pts.select(
         "url",
@@ -301,35 +301,14 @@ def attach_polygon_dim(
 
 
 def pip_join_salted(
-    points: DataFrame,
-    polygons: DataFrame,
-    way_cells: DataFrame,
-    salts: DataFrame,
-    vertex_strategy: str = "shuffle",
+    points: DataFrame, polygons: DataFrame, way_cells: DataFrame, salts: DataFrame
 ) -> DataFrame:
-    """Shuffle prejoin path with explicit hot-cell salting (see
-    ``_prejoin_salted``), then the codegen refine.
-
-    ``vertex_strategy`` controls how the polygon vertex dim attaches to
-    the candidate list: default ``'shuffle'`` (hash join on way_id,
-    two-side-salted by the way-level factors the hot-cell plan induces —
-    see ``attach_polygon_dim``) — this path is chosen precisely because
-    the polygon side outgrew the broadcast ceiling, and vertex bytes
-    grow with covering size, so broadcasting the vertex dim here is the
-    next thing to break at planet scale; plain-keying it instead would
-    re-concentrate the freshly-salted hot pairs onto the polygon ids
-    (measured 2-3× — BENCH.md finding #15). Pass ``'broadcast'`` only
-    when the caller knows the vertex dim is small despite a huge
-    covering (many tiny polygons)."""
-    cand = _prejoin_salted(points, way_cells, salts)
-    cand = attach_polygon_dim(
-        cand,
-        polygons.select("way_id", "vlat", "vlon"),
-        "way_id",
-        vertex_strategy,
-        way_salts=way_salt_plan(way_cells, salts),
-    )
-    return _refine_pip_expr(cand)
+    """Shuffle prejoin with the hot-cell plan ``salts`` (``salt_plan``),
+    then the vertex attach on (way_id, salt) — two-side-salted by the
+    way-level factors the hot-cell plan induces, because plain-keying it
+    would re-concentrate the freshly-salted hot pairs onto the polygon
+    ids (measured 2-3×, BENCH.md finding #15) — then the refine."""
+    return _pip_pairs(points, polygons, way_cells, "salted", salts=salts)[0]
 
 
 def pip_join_multipolygon(
@@ -346,84 +325,26 @@ def pip_join_multipolygon(
     Reference analog: the relation-member model (lib/osm/event.rb:63-65
     nested structs; SURVEY.md §1.4).
 
-    Same filter-then-refine shape and the same strategy surface as
-    ``pip_join``: ``'broadcast'`` prejoins the ring covering (points
-    never shuffle), ``'salted'`` is the shuffle prejoin with explicit
-    data-driven hot-cell salting, ``'auto'`` decides from the
-    bbox-derived covering estimate. Relation multipolygons are exactly
-    where broadcast breaks first — continent/admin boundary rings have
-    the largest coverings of any geometry — so the salted path matters
-    *more* here than for single polygons. After the prejoin: codegen
-    ray-cast refine per candidate (point, ring), then one aggregation
-    per (point, relation) combining roles. A point inside a hole still
-    matches the outer's covering cells, so the inner test runs on
-    exactly the candidates that need it.
+    The prejoin is ``pip_join``'s (``_pip_candidates`` over the ring
+    covering, same strategies and ladder). Relation multipolygons are
+    exactly where broadcast breaks first — continent/admin boundary
+    rings have the largest coverings of any geometry — so the salted
+    and adaptive rungs matter *more* here than for single polygons. The
+    ring dim then attaches as the prejoin went (on the salted path it
+    hash-joins on (way_id, salt): ring vertex bytes grow with the
+    covering), a codegen ray-cast refine runs per candidate (point,
+    ring), and one aggregation per (point, relation) combines roles. A
+    point inside a hole still matches the outer's covering cells, so
+    the inner test runs on exactly the candidates that need it.
 
-    ``levels``: pass the resolution set of a MIXED-resolution ring
-    covering (``build_way_cells_adaptive`` — relation multipolygons are
-    exactly where the flat-res covering explodes first: a continent
-    outer ring at res 9 is 10^7-10^8 cells, its holes tiny). Points
-    expand to their cell at every level (same codegen explode as
-    ``pip_join_adaptive``); both strategies below then work unchanged
-    because mixed-res ids never collide across levels.
-    """
-    from osm_spark.pipeline.geometry import (
-        build_way_cells,
-        build_way_cells_adaptive,
-    )
-
+    ``levels``: pass the resolution set of a MIXED-resolution
+    ``ring_cells`` (``build_way_cells_adaptive``)."""
     ring_geo = rings.select("way_id", "vlat", "vlon")
-    if ring_cells is None:
-        if (
-            strategy == "auto"
-            and estimate_covering_cells(ring_geo) > BROADCAST_MAX_CELLS
-        ):
-            # same ladder as pip_join: a flat covering past the ceiling
-            # first tries the budget-capped mixed-res covering (rings
-            # are where the flat form explodes first)
-            ring_cells = build_way_cells_adaptive(ring_geo)
-            levels = covering_levels(ring_cells)
-            strategy = (
-                "broadcast"
-                if estimate_covering_cells(ring_geo, cap=4096)
-                <= BROADCAST_MAX_CELLS
-                else "salted"
-            )
-        else:
-            ring_cells = build_way_cells(ring_geo)
-    if levels is not None:
-        points = points.withColumn(
-            "h3_9", F.explode(point_cells_expr("lat", "lon", levels))
-        )
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if estimate_covering_cells(ring_geo) <= BROADCAST_MAX_CELLS
-            else "salted"
-        )
-    ring_salts = None
-    if strategy == "broadcast":
-        cand = points.join(
-            F.broadcast(ring_cells), points["h3_9"] == ring_cells["cell"], "inner"
-        ).select("url", "lat", "lon", "way_id")
-    elif strategy == "salted":
-        salts = salt_plan(points)
-        cand = _prejoin_salted(points, ring_cells, salts)
-        ring_salts = way_salt_plan(ring_cells, salts)
-    else:
-        raise ValueError(f"unknown pip_join_multipolygon strategy: {strategy!r}")
-    # The ring vertex dim follows the SAME strategy the prejoin chose:
-    # on the salted path (chosen because the ring covering outgrew the
-    # broadcast ceiling) it hash-joins on (way_id, salt) instead of
-    # broadcasting — ring vertex bytes grow with the covering, and the
-    # two-sided salt keeps a hot cell's stacked rings from
-    # re-concentrating the pairs (see attach_polygon_dim).
-    cand = attach_polygon_dim(
-        cand,
-        rings.select("relation_id", "role", "way_id", "vlat", "vlon"),
-        "way_id",
-        "broadcast" if strategy == "broadcast" else "shuffle",
-        way_salts=ring_salts,
+    cand, ring_salts = _pip_candidates(
+        points, ring_geo, ring_cells, strategy, levels=levels
+    )
+    cand = _attach_way_dim(
+        cand, rings.select("relation_id", "role", "way_id", "vlat", "vlon"), ring_salts
     )
     hit = cand.withColumn(
         "inside", pip_cover_expr(F.col("lat"), F.col("lon"), F.col("vlat"), F.col("vlon"))
@@ -486,57 +407,13 @@ def pip_join(
     strategy: str = "auto",
     budget: int = 4096,
 ) -> DataFrame:
-    """Auto-strategy PIP join. Returns (url, way_id) exact-match pairs.
+    """PIP join. Returns (url, way_id) exact-match pairs.
 
-    ``strategy``: 'broadcast' | 'salted' | 'auto'. Auto decides from the
-    bbox-derived covering estimate (one cheap aggregate over the polygon
-    dim — no covering materialization, no Python); callers that know
-    their catalog stats pass the strategy explicitly and pay no job.
-
-    Auto escalation ladder when no ``way_cells`` is supplied:
-
-    1. flat res-9 covering fits the broadcast ceiling → broadcast
-       prejoin, points never shuffle;
-    2. flat covering too big but the MIXED-resolution covering
-       (``build_way_cells_adaptive``, each polygon capped at ``budget``
-       cells) fits → adaptive broadcast — still zero point shuffle, and
-       measured 3.5× faster than the salted fallback it replaces while
-       building its index 62× faster (BENCH.md adaptive-covering table);
-    3. even Σ min(flat_est, budget) exceeds the ceiling (the polygon
-       COUNT itself is huge) → adaptive covering + salted shuffle.
-
-    Caller-supplied ``way_cells`` keeps the classic two-way choice (the
-    caller owns the covering's shape); explicit 'broadcast'/'salted'
-    with no ``way_cells`` keeps the flat covering for plan-pinning
-    tests and callers that want the exact classic plans."""
-    from osm_spark.pipeline.geometry import (
-        build_way_cells,
-        build_way_cells_adaptive,
-    )
-
-    if way_cells is None and strategy == "auto":
-        if estimate_covering_cells(polygons) <= BROADCAST_MAX_CELLS:
-            return pip_join_broadcast(points, polygons, build_way_cells(polygons))
-        index = build_way_cells_adaptive(polygons, budget=budget)
-        fits = (
-            estimate_covering_cells(polygons, cap=budget) <= BROADCAST_MAX_CELLS
-        )
-        return pip_join_adaptive(
-            points, polygons, index, "broadcast" if fits else "salted"
-        )
-    if way_cells is None:
-        way_cells = build_way_cells(polygons)
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if estimate_covering_cells(polygons) <= BROADCAST_MAX_CELLS
-            else "salted"
-        )
-    if strategy == "broadcast":
-        return pip_join_broadcast(points, polygons, way_cells)
-    if strategy != "salted":
-        raise ValueError(f"unknown pip_join strategy: {strategy!r}")
-    return pip_join_salted(points, polygons, way_cells, salt_plan(points))
+    ``strategy``: 'broadcast' | 'salted' | 'auto' — the ladder of
+    ``_pip_candidates``. Auto costs one cheap aggregate over the polygon
+    dim (no covering materialization, no Python); callers that know
+    their catalog stats pass the strategy explicitly and pay no job."""
+    return _pip_pairs(points, polygons, way_cells, strategy, budget=budget)[0]
 
 
 def covering_levels(way_cells: DataFrame) -> list[int]:
@@ -567,64 +444,113 @@ def pip_join_adaptive(
     """PIP join over a MIXED-resolution covering index
     (``build_way_cells_adaptive``) — the planet-scale covering shape
     where large polygons sit at coarser cells so the index stays
-    ``O(polygons × budget)`` rows instead of ``O(total area)``.
-
-    Plan: each point expands to its cell id at every level present
-    (``explode`` of a codegen array — on the broadcast path the
-    expanded rows exist only inside one WholeStageCodegen pipeline
-    feeding the hash probe, never materialized or shuffled; on the
-    salted path the one prejoin shuffle carries ``levels×`` skinny
-    rows, the same bytes as per-level passes without re-scanning
-    points). Cell ids collide only within a level (res rides the top
-    bits), so ONE equi-join against the whole mixed index is exact:
-    each (point, way) true pair appears exactly once — a way's covering
-    lives at exactly one res and a point has exactly one cell there.
-
-    The salted path reuses the single-level machinery verbatim: the
-    hot-cell histogram over the exploded frame prices EVERY level's
-    cells in one map-side-combined aggregate (a hot fine cell makes its
-    coarse ancestors at least as hot, so they earn their own factors),
-    and the vertex attach inherits per-way factors exactly as in
-    ``pip_join_salted`` (BENCH.md finding #15).
+    ``O(polygons × budget)`` rows instead of ``O(total area)``. Each
+    point expands to its cell at every level (see ``_pip_candidates``).
 
     ``levels``: pass the catalog's known level set to skip the
     ``covering_levels`` job."""
-    cand, way_salts = _adaptive_candidates(points, way_cells, strategy, levels)
-    vx = polygons.select("way_id", "vlat", "vlon")
-    if way_salts is None:
-        cand = attach_polygon_dim(cand, vx, "way_id", "broadcast")
-    else:
-        cand = attach_polygon_dim(
-            cand, vx, "way_id", "shuffle", way_salts=way_salts
-        )
-    return _refine_pip_expr(cand)
-
-
-def _adaptive_candidates(
-    points: DataFrame,
-    way_cells: DataFrame,
-    strategy: str,
-    levels: list[int] | None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Candidate (url, lat, lon, way_id) pairs for the mixed-res
-    covering, plus the per-way salt plan when the salted path ran
-    (None on the broadcast path) — shared by ``pip_join_adaptive`` and
-    ``reverse_geocode``'s adaptive rungs, whose downstream polygon-dim
-    attaches must follow the same salting (BENCH.md finding #15)."""
     if levels is None:
         levels = covering_levels(way_cells)
-    mp = points.withColumn(
-        "h3_9", F.explode(point_cells_expr("lat", "lon", levels))
+    return _pip_pairs(points, polygons, way_cells, strategy, levels=levels)[0]
+
+
+def _pip_candidates(
+    points: DataFrame,
+    way_geo: DataFrame,
+    way_cells: DataFrame | None = None,
+    strategy: str = "auto",
+    budget: int = 4096,
+    levels: list[int] | None = None,
+    salts: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one PIP strategy ladder and prejoin: candidate
+    (url, lat, lon, way_id) pairs of ``points`` × the covering of
+    ``way_geo`` (way_id, vlat, vlon), plus the per-way salt plan the
+    polygon-dim attaches must follow (None on the broadcast path).
+
+    ``strategy`` 'auto' decides from the bbox covering estimate:
+
+    - no ``way_cells``: the flat res-9 covering fits the broadcast
+      ceiling → flat broadcast, points never shuffle. Otherwise the
+      MIXED-resolution covering (``build_way_cells_adaptive``, each
+      polygon capped at ``budget`` cells) → broadcast when the capped
+      estimate Σ min(flat_est, budget) fits, else salted. Adaptive
+      broadcast measured 3.5× faster than the salted fallback it
+      replaces, building its index 62× faster (BENCH.md
+      adaptive-covering table);
+    - ``way_cells`` supplied: the caller owns the covering's shape, so
+      only broadcast vs salted, from the flat estimate.
+
+    Explicit 'broadcast'/'salted' with no ``way_cells`` builds the flat
+    covering and pays no estimate job.
+
+    ``levels`` (a mixed-res covering's resolution set): each point
+    expands to its cell at every level, one codegen ``explode`` — on the
+    broadcast path the expanded rows exist only inside the
+    WholeStageCodegen pipeline feeding the hash probe; on the salted
+    path the one prejoin shuffle carries ``levels×`` skinny rows. Cell
+    ids collide only within a level (res rides the top bits), so ONE
+    equi-join against the whole mixed index is exact: a way's covering
+    lives at exactly one res and a point has exactly one cell there.
+    The hot-cell histogram over the exploded frame prices every level's
+    cells in one aggregate (a hot fine cell makes its coarse ancestors
+    at least as hot, so they earn their own factors).
+
+    ``salts`` replaces the salted path's ``salt_plan(points)``.
+    """
+    from osm_spark.pipeline.geometry import (
+        build_way_cells,
+        build_way_cells_adaptive,
     )
+
+    if strategy == "auto":
+        est = estimate_covering_cells(way_geo)
+        if way_cells is None and est > BROADCAST_MAX_CELLS:
+            way_cells = build_way_cells_adaptive(way_geo, budget=budget)
+            est = estimate_covering_cells(way_geo, cap=budget)
+            levels = covering_levels(way_cells)
+        strategy = "broadcast" if est <= BROADCAST_MAX_CELLS else "salted"
+    if way_cells is None:
+        way_cells = build_way_cells(way_geo)
+    if levels is not None:
+        points = points.withColumn(
+            "h3_9", F.explode(point_cells_expr("lat", "lon", levels))
+        )
     if strategy == "broadcast":
-        cand = mp.join(
-            F.broadcast(way_cells), mp["h3_9"] == way_cells["cell"], "inner"
+        cand = points.join(
+            F.broadcast(way_cells), points["h3_9"] == way_cells["cell"], "inner"
         ).select("url", "lat", "lon", "way_id")
         return cand, None
-    if strategy == "salted":
-        salts = salt_plan(mp)
-        return (
-            _prejoin_salted(mp, way_cells, salts),
-            way_salt_plan(way_cells, salts),
-        )
-    raise ValueError(f"unknown pip_join_adaptive strategy: {strategy!r}")
+    if strategy != "salted":
+        raise ValueError(f"unknown PIP strategy: {strategy!r}")
+    if salts is None:
+        salts = salt_plan(points)
+    return _prejoin_salted(points, way_cells, salts), way_salt_plan(way_cells, salts)
+
+
+def _attach_way_dim(
+    cand: DataFrame, dim: DataFrame, way_salts: DataFrame | None
+) -> DataFrame:
+    """Attach a way_id-keyed dim the way the prejoin went: broadcast
+    beside a broadcast prejoin, else the shuffle attach two-side-salted
+    by ``way_salts`` (``attach_polygon_dim``)."""
+    strategy = "broadcast" if way_salts is None else "shuffle"
+    return attach_polygon_dim(cand, dim, "way_id", strategy, way_salts=way_salts)
+
+
+def _pip_pairs(
+    points: DataFrame,
+    polygons: DataFrame,
+    way_cells: DataFrame | None,
+    strategy: str,
+    budget: int = 4096,
+    levels: list[int] | None = None,
+    salts: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Exact (url, way_id) pairs and the per-way salts their prejoin
+    used: ``_pip_candidates``, the vertex attach, the codegen refine."""
+    cand, way_salts = _pip_candidates(
+        points, polygons, way_cells, strategy, budget, levels, salts
+    )
+    cand = _attach_way_dim(cand, polygons.select("way_id", "vlat", "vlon"), way_salts)
+    return _refine_pip_expr(cand), way_salts

@@ -153,39 +153,3 @@ def range_join(
         )
         .drop("_bucket")
     )
-
-
-def history_intervals(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Event log → per-key validity intervals (SCD2 / temporal-table
-    shape): consecutive rows with unchanged ``value_cols`` collapse into
-    one interval; each change opens a new one. ``valid_to`` is the next
-    change's timestamp, NULL for the open (current) interval — the same
-    null-open convention the reference uses for 'current' status
-    (online_payment.rb PaymentStatus history: latest + full history).
-
-    One shuffle on the key; everything else is window arithmetic.
-    """
-    # The value struct is the deterministic tiebreaker for duplicate
-    # (key, ts) rows — without it lag/grouping order is run-dependent
-    # (same fix asof_join carries via its "_r" tertiary sort key).
-    val = F.struct(*[F.col(c) for c in value_cols])
-    w = Window.partitionBy(key).orderBy(F.col(ts_col), val)
-    changed = (
-        F.lag(val).over(w).isNull() | ~F.lag(val).over(w).eqNullSafe(val)
-    ).cast("int")
-    grouped = df.withColumn("_chg", changed).withColumn(
-        "_grp", F.sum("_chg").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    intervals = grouped.groupBy(key, "_grp", *value_cols).agg(
-        F.min(ts_col).alias("valid_from"),
-        F.count("*").alias("n_events"),
-    )
-    w2 = Window.partitionBy(key).orderBy("valid_from")
-    return intervals.withColumn(
-        "valid_to", F.lead("valid_from").over(w2)
-    ).select(key, *value_cols, "valid_from", "valid_to", "n_events")

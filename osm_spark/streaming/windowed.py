@@ -168,85 +168,3 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     return events.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-
-
-def dedup_events(
-    events: DataFrame,
-    id_cols: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup with bounded state — the training-data
-    dedup operator on a live crawl feed.
-
-    Streaming input: ``dropDuplicatesWithinWatermark`` keeps per-key
-    state only until the watermark passes, so a 10^12-event stream holds
-    ``keys-within-watermark`` state instead of all history (the classic
-    unbounded-state failure of plain dropDuplicates on streams). Batch
-    input: plain dropDuplicates — identical results whenever duplicate
-    arrivals fall inside the watermark, which is the operator's contract.
-    """
-    cols = list(id_cols or ["event_id"])
-    if events.isStreaming:
-        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(cols)
-    return events.dropDuplicates(cols)
-
-
-def run_dedup_batchlike(
-    spark: SparkSession, events_dir: str, id_cols: list[str] | None = None
-) -> DataFrame:
-    """availableNow bounded run of the streaming dedup into a memory
-    sink (same pattern as run_windowed_counts_batchlike)."""
-    import uuid
-
-    sink = f"dd_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup_events(stream_events(spark, events_dir), id_cols)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
-
-
-def attribution_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream attribution: each purchase joined to the clicks by
-    the same user that happened within ``max_lag`` before it.
-
-    On streams both sides carry watermarks and the time-range condition
-    bounds the join state (Spark retains each side only for
-    watermark + lag) — the canonical watermarked stream-stream inner
-    join. On batch frames the identical join expression runs as a plain
-    join, so stream ≡ batch is testable on bounded input.
-
-    Output: (user_id, click_id, click_ts, purchase_id, purchase_ts).
-    """
-    c = clicks.select(
-        F.col("user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if c.isStreaming:
-        c = c.withWatermark("click_ts", watermark)
-    if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL '{max_lag}'"))
-    )
-    return c.join(p, cond, "inner").select(
-        "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts"
-    )

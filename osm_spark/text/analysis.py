@@ -145,34 +145,3 @@ def fingerprint(text: Column | str) -> Column:
     (the engine's canonical content id; collision-safe at 10^12 docs)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(F.regexp_replace(F.trim(F.lower(c)), " +", " "))
-
-
-def corpus_stats(
-    docs: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Per-language corpus statistics from mergeable sketches — the cheap
-    single-pass pre-read a 100 TB curation/mixing pipeline runs before
-    committing to dedup or sampling plans.
-
-    approx_count_distinct is HyperLogLog++ (relative sd ``rsd``) over the
-    content fingerprint — a duplicate-rate estimate at a fraction of the
-    exact-distinct shuffle; percentile_approx is the GK quantile sketch
-    over document length. Both are partial-aggregated map-side, so the
-    one shuffle carries sketch bytes per (partition, language), not rows.
-    """
-    base = docs.select(
-        F.col(lang_col).alias("lang"),
-        fingerprint(text_col).alias("fp"),
-        F.length(text_col).alias("n_chars"),
-    )
-    return base.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.approx_count_distinct("fp", rsd).alias("approx_distinct_docs"),
-        F.percentile_approx(
-            "n_chars", [0.5, 0.9, 0.99], 10000
-        ).alias("len_p50_p90_p99"),
-        F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
-    )

@@ -63,7 +63,6 @@ def test_reverse_geocode_adaptive_rungs_match(spark, points, monkeypatch):
     """When the flat covering estimate exceeds the ceiling, auto must
     climb to the adaptive rungs (broadcast, then salted) and return the
     identical smallest-polygon picks."""
-    import osm_spark.geo.geocode as gc
     import osm_spark.pipeline.spatial_join as sj_mod
     from osm_spark.pipeline.geometry import synth_polygons
 
@@ -77,7 +76,6 @@ def test_reverse_geocode_adaptive_rungs_match(spark, points, monkeypatch):
     capped = sj_mod.estimate_covering_cells(polys, cap=8)
     assert capped < flat_est
     # rung 2: flat too big, capped fits
-    monkeypatch.setattr(gc, "BROADCAST_MAX_CELLS", (capped + flat_est) // 2)
     monkeypatch.setattr(sj_mod, "BROADCAST_MAX_CELLS", (capped + flat_est) // 2)
     got2 = {
         (r.url, r.way_id)
@@ -85,7 +83,6 @@ def test_reverse_geocode_adaptive_rungs_match(spark, points, monkeypatch):
     }
     assert got2 == want
     # rung 3: even the capped estimate exceeds the ceiling -> adaptive salted
-    monkeypatch.setattr(gc, "BROADCAST_MAX_CELLS", capped // 2)
     monkeypatch.setattr(sj_mod, "BROADCAST_MAX_CELLS", capped // 2)
     got3 = {
         (r.url, r.way_id)

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import osm_spark.graph.components as components
+import osm_spark.graph.hits as hits
 import osm_spark.graph.kcore as kcore
 import osm_spark.graph.ktruss as ktruss
 import osm_spark.graph.landmarks as landmarks
@@ -345,3 +346,40 @@ def test_loop_round_launches_only_its_write(spark, tmp_path, count_jobs, monkeyp
     monkeypatch.setattr(module, "fixpoint", spy)
     call(spark).collect()
     assert seen and all(jobs == plain > 0 for jobs, plain in seen), seen
+
+
+def test_hits_leaves_only_its_result(spark, leaves):
+    """hits truncates its vertex set and edge list once and drops both
+    after the last round: only the hub and auth leaves stay."""
+    before = leaves()
+    out = hits.hits(_edges(spark, [(s, d) for s, d, _ in WEIGHTED]))
+    assert out.count() == 6
+    assert leaves() - before == _leaves_of(out) and len(_leaves_of(out)) == 2
+
+
+# name: weighted loop called with max_hops 6
+NONNEGATIVE_LOOPS = {
+    "sssp": lambda s, e: sssp.shortest_paths(e, s.createDataFrame([(1,)], "id long"), 6),
+    "landmarks": lambda s, e: landmarks.landmark_distances(e, [1, 4], 6),
+}
+
+
+@pytest.mark.parametrize("name", list(NONNEGATIVE_LOOPS))
+def test_negative_weights_seen_on_the_edge_write(spark, leaves, count_jobs, name):
+    """The negative-weight check reads its count off the edge
+    truncation's write, with no job of its own, and a rejected call
+    leaves no leaf behind, a fractional -0.5 included."""
+    call = NONNEGATIVE_LOOPS[name]
+    before = leaves()
+    out, jobs = count_jobs(lambda: call(spark, _weighted(spark)))
+    assert jobs == 21
+    assert leaves() - before == _leaves_of(out)
+    before = leaves()
+    for w in (-4, -0.5):
+        bad = _weighted(spark).withColumn(
+            "w", F.when(F.col("src") == 3, F.lit(w)).otherwise(F.col("w"))
+        )
+        with pytest.raises(ValueError, match="non-negative"):
+            call(spark, bad)
+        assert leaves() == before
+

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_spark.geo.overlay import overlay_join, overlay_strategy
+from osm_spark.geo.overlay import overlay_join
 from osm_spark.pipeline.geometry import (
     build_way_cells,
     synth_polygons,
@@ -112,11 +112,6 @@ def test_overlay_shuffle_plan_has_no_cartesian(fixtures):
     plan = overlay_join(pa, pb, ca, cb, strategy="shuffle")._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_overlay_strategy_threshold():
-    assert overlay_strategy(10_000) == "broadcast"
-    assert overlay_strategy(5_000_000) == "shuffle"
 
 
 def test_dissolve_transitive_clusters(spark):

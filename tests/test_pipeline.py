@@ -122,6 +122,110 @@ def test_pip_salted_equals_broadcast(spark, points):
     assert sj == bc
 
 
+# A 0.5°-wide square (~10^5 res-9 cells) pushes the flat covering
+# estimate well past the budget-capped one.
+BIG_SQUARE = ([51.3, 51.3, 51.8, 51.8], [-0.4, 0.1, 0.1, -0.4])
+HOLE = ([51.49, 51.49, 51.51, 51.51], [-0.15, -0.12, -0.12, -0.15])
+
+
+def _ladder_inputs(spark, sf_small_dir, points):
+    """entry point → (the polygons its ladder estimates, the call)."""
+    import osm_spark.pipeline.flagship as flagship
+    from osm_spark.geo.geocode import reverse_geocode
+    from osm_spark.pipeline.spatial_join import pip_join_multipolygon
+
+    polys = (
+        synth_polygons(spark)
+        .select("way_id", "vlat", "vlon")
+        .unionByName(
+            spark.createDataFrame(
+                [(77777, *BIG_SQUARE)], "way_id long, vlat array<double>, vlon array<double>"
+            )
+        )
+    )
+    rings = spark.createDataFrame(
+        [(600, "outer", 8001, *BIG_SQUARE), (600, "inner", 8002, *HOLE)],
+        "relation_id long, role string, way_id long, vlat array<double>, vlon array<double>",
+    )
+    return {
+        "pip_join": (polys, lambda: pip_join(points, polys)),
+        "reverse_geocode": (polys, lambda: reverse_geocode(points, polys)),
+        "flagship_query": (
+            synth_polygons(spark),
+            lambda: flagship.flagship_query(spark, sf_small_dir),
+        ),
+        "pip_join_multipolygon": (
+            rings.select("way_id", "vlat", "vlon"),
+            lambda: pip_join_multipolygon(points, rings),
+        ),
+    }
+
+
+# (jobs launched while building the frame, estimate_covering_cells calls)
+# per rung. flagship_query supplies its flat covering, so it has only
+# the two-way choice: broadcast, broadcast, salted.
+PIP_LADDER = {
+    "pip_join": {
+        "flat_broadcast": (2, 1), "adaptive_broadcast": (6, 2), "adaptive_salted": (6, 2),
+    },
+    "reverse_geocode": {
+        "flat_broadcast": (2, 1), "adaptive_broadcast": (6, 2), "adaptive_salted": (6, 2),
+    },
+    "flagship_query": {
+        "flat_broadcast": (3, 1), "adaptive_broadcast": (3, 1), "adaptive_salted": (3, 1),
+    },
+    "pip_join_multipolygon": {
+        "flat_broadcast": (2, 1), "adaptive_broadcast": (6, 2), "adaptive_salted": (6, 2),
+    },
+}
+
+
+@pytest.mark.parametrize("rung", ["flat_broadcast", "adaptive_broadcast", "adaptive_salted"])
+@pytest.mark.parametrize("entry", list(PIP_LADDER))
+def test_pip_ladder_jobs_per_entry_and_rung(
+    spark, sf_small_dir, points, count_jobs, monkeypatch, entry, rung
+):
+    """Every PIP entry point climbs the one ladder in ``_pip_candidates``:
+    patching ``spatial_join.BROADCAST_MAX_CELLS`` alone moves each of
+    them onto the rung's prejoin, and each rung launches a pinned number
+    of jobs and estimates."""
+    import osm_spark.pipeline.spatial_join as sj
+
+    geo, call = _ladder_inputs(spark, sf_small_dir, points)[entry]
+    est = sj.estimate_covering_cells
+    flat, capped = est(geo), est(geo, cap=4096)
+    ceiling = {
+        "flat_broadcast": sj.BROADCAST_MAX_CELLS,
+        "adaptive_broadcast": (capped + flat) // 2,
+        "adaptive_salted": capped // 2,
+    }[rung]
+    monkeypatch.setattr(sj, "BROADCAST_MAX_CELLS", ceiling)
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return est(*args, **kwargs)
+
+    monkeypatch.setattr(sj, "estimate_covering_cells", spy)
+    out, jobs = count_jobs(call)
+    assert (jobs, len(calls)) == PIP_LADDER[entry][rung]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("_vsalt" in plan) == (rung == "adaptive_salted")
+
+
+def test_flagship_query_salted_matches_broadcast(spark, sf_small_dir, monkeypatch):
+    """flagship_query's salted branch (the name dim two-side-salted like
+    the vertex dim) returns the broadcast branch's rows."""
+    import osm_spark.pipeline.spatial_join as sj
+    from osm_spark.pipeline.flagship import flagship_query
+
+    want = sorted(flagship_query(spark, sf_small_dir).collect())
+    monkeypatch.setattr(sj, "BROADCAST_MAX_CELLS", 0)
+    salted = flagship_query(spark, sf_small_dir)
+    assert "_vsalt" in salted._jdf.queryExecution().executedPlan().toString()
+    assert sorted(salted.collect()) == want and len(want) > 50
+
+
 def test_tile_assignment_exact(points):
     rows = points.select("url", "lat", "lon", tile_xy("lat", "lon", 12).alias("t")).collect()
     for r in rows:

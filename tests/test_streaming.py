@@ -129,57 +129,6 @@ def test_sessionize_boundary_exact_gap_is_same_session(spark):
     assert len(got) == 1 and got[0].n_events == 2
 
 
-def test_stream_dedup_equals_batch_distinct(spark, sf_small_dir, tmp_path):
-    """Watermarked streaming dedup over a doubled input == batch
-    distinct: every event_id exactly once, stream ≡ batch."""
-    from osm_spark.streaming.windowed import dedup_events, run_dedup_batchlike
-
-    src = spark.read.parquet(f"{sf_small_dir}/events.parquet")
-    doubled_dir = str(tmp_path / "doubled")
-    src.unionByName(src).repartition(4).write.mode("overwrite").parquet(doubled_dir)
-
-    batch = dedup_events(spark.read.parquet(doubled_dir))
-    got = run_dedup_batchlike(spark, doubled_dir)
-    n_src = src.select("event_id").distinct().count()
-    assert batch.count() == n_src
-    assert got.count() == n_src
-    ids = [r.event_id for r in got.select("event_id").collect()]
-    assert len(ids) == len(set(ids))
-
-
-def test_attribution_join_stream_equals_batch(spark, sf_small_dir, tmp_path):
-    """Watermarked stream-stream join (availableNow) == the identical
-    batch join: purchases attributed to same-user clicks within 1 h."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from osm_spark.streaming.windowed import attribution_join, stream_events
-
-    src = f"{sf_small_dir}/events.parquet"
-    batch_e = spark.read.parquet(src)
-    b_clicks = batch_e.filter(F.col("event_type") == "click")
-    b_purch = batch_e.filter(F.col("event_type") == "purchase")
-    batch = attribution_join(b_clicks, b_purch)
-    exp = {(r.click_id, r.purchase_id) for r in batch.collect()}
-    assert exp  # fixture must actually produce attributions
-
-    s_clicks = stream_events(spark, src).filter(F.col("event_type") == "click")
-    s_purch = stream_events(spark, src).filter(F.col("event_type") == "purchase")
-    sink = f"attr_{uuid.uuid4().hex[:8]}"
-    q = (
-        attribution_join(s_clicks, s_purch)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r.click_id, r.purchase_id) for r in spark.table(sink).collect()}
-    assert got == exp
-
-
 def test_trending_stream_equals_batch(spark, sf_small_dir):
     """The availableNow streaming trending plan must produce exactly the
     batch plan's result on the same documents (stream ≡ batch)."""

@@ -105,31 +105,6 @@ def test_range_join_plan_has_no_cartesian(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_history_intervals_scd2(spark):
-    """Change log -> validity intervals: runs collapse, changes open new
-    intervals, the current interval has NULL valid_to, and re-appearing
-    values start fresh intervals (no global dedupe)."""
-    t = lambda m: dt.datetime(2024, 1, 1, 9, m)
-    rows = [
-        (1, t(0), "pending"), (1, t(5), "pending"), (1, t(10), "paid"),
-        (1, t(20), "pending"),  # value returns -> NEW interval
-        (2, t(0), "paid"),
-    ]
-    df = spark.createDataFrame(rows, "uid long, ts timestamp, status string")
-    from osm_spark.pipeline.temporal import history_intervals
-
-    got = sorted(
-        (r.uid, r.status, r.valid_from, r.valid_to, r.n_events)
-        for r in history_intervals(df, "uid", "ts", ["status"]).collect()
-    )
-    assert got == [
-        (1, "paid", t(10), t(20), 1),
-        (1, "pending", t(0), t(10), 2),
-        (1, "pending", t(20), None, 1),
-        (2, "paid", t(0), None, 1),
-    ]
-
-
 def test_range_join_zero_width_intervals_safe(spark):
     """ADVICE r2: a zero median interval width must not clamp to 1e-9
     (which would explode F.sequence to ~width/1e-9 rows per real
@@ -170,25 +145,3 @@ def test_range_join_zero_width_intervals_safe(spark):
         for r in range_join(left, right_pts, "p", "lo", "hi").collect()
     }
     assert got2 == {(i, i) for i in range(0, 50, 7)}
-
-
-def test_history_intervals_duplicate_ts_deterministic(spark):
-    """Duplicate (key, ts) rows: the value-struct tiebreaker makes the
-    interval split order stable across runs."""
-    from osm_spark.pipeline.temporal import history_intervals
-
-    rows = [(1, 10, "a"), (1, 10, "b"), (1, 20, "a")]
-    df = spark.createDataFrame(rows, "uid long, ts long, status string")
-    outs = [
-        sorted(
-            (r.status, r.valid_from, r.valid_to, r.n_events)
-            for r in history_intervals(df, "uid", "ts", ["status"]).collect()
-        )
-        for _ in range(3)
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    # ordering is (ts, struct): a@10 < b@10 < a@20 → three intervals
-    assert outs[0] == sorted(
-        [("a", 10, 10, 1), ("b", 10, 20, 1), ("a", 20, None, 1)],
-        key=lambda t: (t[0], t[1], t[2] if t[2] is not None else 1 << 60),
-    )

@@ -7,7 +7,6 @@ import math
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from osm_spark.text.analysis import (
     LANG_MARKERS,
@@ -80,31 +79,3 @@ def test_fingerprint_normalizes_whitespace(spark):
     got = [r.f for r in df.select(fingerprint("text").alias("f")).collect()]
     want = hashlib.md5(b"hello world").hexdigest()
     assert got == [want] * 3
-
-
-def test_corpus_stats_sketch_error_bounds(docs):
-    """HLL distinct estimate within 3·rsd of exact; GK quantiles within
-    the sketch's rank tolerance of exact percentiles."""
-    import numpy as np
-
-    from osm_spark.text.analysis import corpus_stats, fingerprint
-
-    got = {r.lang: r for r in corpus_stats(docs, rsd=0.05).collect()}
-    exact = {
-        r.lang: r
-        for r in docs.select("lang", fingerprint("text").alias("fp"), F.length("text").alias("n"))
-        .groupBy("lang")
-        .agg(
-            F.countDistinct("fp").alias("nd"),
-            F.count("*").alias("n_docs"),
-            F.expr("percentile(n, array(0.5, 0.9, 0.99))").alias("qs"),
-        )
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for lang, e in exact.items():
-        g = got[lang]
-        assert g.n_docs == e.n_docs
-        assert abs(g.approx_distinct_docs - e.nd) <= max(3, 3 * 0.05 * e.nd)
-        for approx_q, exact_q in zip(g.len_p50_p90_p99, e.qs):
-            assert abs(approx_q - exact_q) <= max(5, 0.05 * exact_q)
