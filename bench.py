@@ -79,7 +79,7 @@ def build_queries(spark):
         pts = extract_points(pages)
         return pip_join(pts, polygons, way_cells, strategy="broadcast")
 
-    # catalog-stat analog: occupied cells <= page rows; phase2_strategy
+    # catalog-stat analog: occupied cells <= page rows; phase-2 auto
     # picks broadcast here (1M cells x (k+eps) structs ~ 168 MB) and
     # flips to the shuffle hash join past the broadcast ceiling —
     # measured at this SF the two are within noise (BENCH.md).
@@ -406,7 +406,7 @@ def run_skew_knn() -> dict:
     - ``salted``: the data-driven salted shuffle (pipeline/salting.py)
       — hot-cell points scatter over k buckets, the cell's candidate
       array replicates k ways.
-    - ``unsalted_shuffle``: phase2='aqe' — the raw pcell shuffle-hash
+    - ``unsalted_shuffle``: phase2='shuffle' — the raw pcell shuffle-hash
       join with AQE's skew split as the only backstop (the strawman).
 
     kNN's per-row work is bounded (k+ε candidates), so unlike PIP this
@@ -464,7 +464,7 @@ def run_skew_knn() -> dict:
             n_nodes=n_nodes_stat,
         ),
         "unsalted_shuffle": lambda: knn_join(
-            pts, nodes, k=3, res=res, phase2="aqe", n_nodes=n_nodes_stat
+            pts, nodes, k=3, res=res, phase2="shuffle", n_nodes=n_nodes_stat
         ),
     }
     counts = {name: fn().count() for name, fn in jobs.items()}  # warm + verify

@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.pipeline.salting import keyed_join
+
 __all__ = [
     "DEFAULT_SCALE",
     "DEFAULT_CELL_UNITS",
@@ -219,17 +221,14 @@ def segment_crossings(
         "cellk",
     )
     if salts is not None:
-        from osm_spark.pipeline.salting import salted_equi_join
-
         left = left.withColumn(
             "_sid",
             F.col("way_a") * F.lit(1 << 20) + F.col("seg_a"),
         )
-        cand = salted_equi_join(left, right, "cellk", salts, "_sid").drop(
-            "_sid"
-        )
-    else:
-        cand = left.join(right.hint("shuffle_hash"), "cellk")
+    cand = keyed_join(
+        left, right, "cellk", "shuffle" if salts is None else "salted",
+        salts=salts, scatter="_sid",
+    ).drop("_sid")
     if self_join:
         cand = cand.where(F.col("way_a") < F.col("way_b"))
     return (

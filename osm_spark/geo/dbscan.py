@@ -55,6 +55,7 @@ from osm_spark.geo.hexgrid import hex_cell_expr, hex_disk_expr
 from osm_spark.geo.knn import haversine_m
 from osm_spark.geo.radius import plan_res, plan_ring
 from osm_spark.graph.components import connected_components
+from osm_spark.pipeline.salting import keyed_join
 
 
 def eps_pairs(
@@ -109,12 +110,10 @@ def eps_pairs(
             hex_disk_expr(hex_cell_expr("lat", "lon", res), res, ring)
         ).alias("cell"),
     )
-    if salts is not None:
-        from osm_spark.pipeline.salting import salted_equi_join
-
-        joined = salted_equi_join(left, right, "cell", salts, "a_id")
-    else:
-        joined = left.join(right.hint("shuffle_hash"), "cell")
+    joined = keyed_join(
+        left, right, "cell", "shuffle" if salts is None else "salted",
+        salts=salts, scatter="a_id",
+    )
     return (
         joined
         .where(F.col("a_id") < F.col("b_id"))

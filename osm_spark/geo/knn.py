@@ -41,16 +41,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_spark.geo.hexgrid import edge_deg, hex_cell_expr, hex_center_expr, hex_disk_expr
+from osm_spark.pipeline import salting
 
 EARTH_RADIUS_M = 6371000.0
 DEG_M = 111320.0  # meters per degree of latitude
 
-# Phase-2 strategy threshold: estimated candidate-table bytes above which
-# the broadcast is replaced by a shuffle hash join on the cell id. 256 MB
-# is far under Spark's 8 GB broadcast hard ceiling and a sane per-executor
-# memory bite; a candidate row is a cell id + (k+ε) structs of
-# (node_id, nlat, nlon) ≈ 24 bytes each.
-PHASE2_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+# a phase-2 candidate row is a cell id + (k+ε) structs of
+# (node_id, nlat, nlon) ≈ 24 bytes each
 _CAND_STRUCT_BYTES = 24
 _CAND_SLACK = 4  # ε: candidates beyond k that the prune typically keeps
 
@@ -251,31 +248,6 @@ def cell_candidates_ring(
 _NODE_ROW_BYTES = 24  # node id + 2 doubles
 
 
-def phase1_strategy(n_nodes: int) -> str:
-    """Pick the phase-1 candidate builder from a node-count estimate —
-    the same estimate-driven pattern as ``phase2_strategy`` /
-    ``radius_strategy``. ``cell_candidates`` broadcasts the whole node
-    dim into a per-cell cross (right while it fits an executor);
-    ``cell_candidates_ring`` is the planet-scale cell-disk equi-join
-    escalation for node dims past the ceiling (10^8 OSM amenity nodes
-    ≈ 2.4 GB — far past any sane broadcast)."""
-    return (
-        "broadcast"
-        if n_nodes * _NODE_ROW_BYTES <= PHASE2_BROADCAST_MAX_BYTES
-        else "ring"
-    )
-
-
-def phase2_strategy(n_cells: int, k: int) -> str:
-    """Pick the phase-2 join strategy from an occupied-cell estimate —
-    the same estimate-driven auto-choice as ``pip_join``'s
-    (``estimate_covering_cells``). ``n_cells`` is a catalog/lineage stat
-    (the distinct-cell count of the points table); the candidate table
-    is ~``n_cells × (k+ε)`` structs."""
-    est_bytes = n_cells * (k + _CAND_SLACK) * _CAND_STRUCT_BYTES
-    return "broadcast" if est_bytes <= PHASE2_BROADCAST_MAX_BYTES else "shuffle"
-
-
 def knn_join(
     points: DataFrame,
     nodes: DataFrame,
@@ -294,20 +266,23 @@ def knn_join(
     not depend on it, only candidate fanout (finer res → tighter prune
     radius → fewer candidates, more cells in phase 1).
 
-    ``phase1``: 'broadcast' (cells × broadcast nodes — right while the
-    node table broadcasts), 'ring' (cell-disk equi-join escalation,
+    ``phase1`` picks the candidate builder, not a join form:
+    'broadcast' (cells × broadcast nodes — right while the node table
+    broadcasts), 'ring' (cell-disk equi-join escalation,
     ``cell_candidates_ring`` — the planet-scale form where the node side
-    no longer fits a broadcast), or 'auto' (default): decide by
-    ``phase1_strategy`` from ``n_nodes`` (a catalog stat) when supplied,
-    else from ONE count over the node dim — the same single-scalar-
-    over-the-small-dim precedent as ``radius_join``'s ``max_abs_lat``
-    (the node dim is exactly the input a caller is least likely to know
-    the size of, so the planet path must not require being asked for by
-    name). Both builders produce identical candidate sets (tested), so
-    phase 2 and results are unchanged.
+    no longer fits a broadcast: 10^8 OSM amenity nodes ≈ 2.4 GB), or
+    'auto' (default): 'broadcast' while ``n_nodes`` × 24 B fits
+    ``salting.BROADCAST_MAX_BYTES``. ``n_nodes`` is a catalog stat; when
+    omitted ONE memoized count runs over the node dim — the same
+    single-scalar-over-the-small-dim precedent as ``radius_join``'s
+    ``max_abs_lat`` (the node dim is exactly the input a caller is least
+    likely to know the size of, so the planet path must not require
+    being asked for by name). Both builders produce identical candidate
+    sets (tested), so phase 2 and results are unchanged.
 
-    ``phase2`` picks the physical join of points × candidate sets —
-    results are identical on every path (tested); only the plan differs:
+    ``phase2`` picks the physical join of points × candidate sets
+    (``salting.keyed_join``) — results are identical on every path
+    (tested); only the plan differs:
 
     - ``'broadcast'``: candidate sets broadcast; points never shuffle.
       Right whenever the occupied-cell count × (k+ε) fits a broadcast.
@@ -317,18 +292,12 @@ def knn_join(
       multi-GB (bounded below by the global occupied-cell count), past
       any sane broadcast. Still no window/sort over the big side.
     - ``'auto'`` (default): with ``n_cells`` (a catalog stat — the
-      distinct-cell count of the points table), choose by the
-      ``phase2_strategy`` size estimate without running anything.
-      Without any stat, the join is PINNED shuffle-hash: join-strategy
-      hints precede size-based selection in JoinSelection — at static
-      planning AND at AQE re-planning — so a hinted join never upgrades
-      to broadcast; that upgrade is deliberately traded away. Unhinted,
-      the static planner picks SortMergeJoin (the aggregate has no
-      usable stats) and the worst case SORTS the 10^12-row points side;
-      hinted, the worst case is the intended shuffle-hash plan, and the
-      best case loses only the network fetch of a shuffle the points
-      side has already written. Callers who want the broadcast plan
-      supply the stat (``n_cells``) or pass ``phase2='broadcast'``.
+      distinct-cell count of the points table), broadcast while the
+      ``n_cells × (k+ε) × 24 B`` estimate fits, without running
+      anything. Without any stat the join is PINNED shuffle-hash (the
+      ``keyed_join`` trade-off: the worst case never sorts the points
+      side). Callers who want the broadcast plan supply the stat
+      (``n_cells``) or pass ``phase2='broadcast'``.
     - ``'salted'``: the shuffle plan with explicit hot-cell splitting
       (pipeline/salting.py — the PIP family's scatter/replicate shape
       on the pcell key): points in a hot cell scatter over
@@ -364,9 +333,10 @@ def knn_join(
         # (BENCH r4 knn regression; pipeline/stats.py)
         from osm_spark.pipeline.stats import memoized_count
 
-        phase1 = phase1_strategy(
-            n_nodes if n_nodes is not None else memoized_count(n)
-        )
+        if n_nodes is None:
+            n_nodes = memoized_count(n)
+        fits = n_nodes * _NODE_ROW_BYTES <= salting.BROADCAST_MAX_BYTES
+        phase1 = "broadcast" if fits else "ring"
     if phase1 not in ("broadcast", "ring"):
         raise ValueError(f"unknown knn_join phase1 strategy: {phase1!r}")
     phase1_fn = cell_candidates_ring if phase1 == "ring" else cell_candidates
@@ -381,33 +351,11 @@ def knn_join(
             F.collect_list(F.struct("node_id", "nlat", "nlon")).alias("cands")
         )
     )
-    if phase2 == "auto":
-        phase2 = phase2_strategy(n_cells, k) if n_cells is not None else "aqe"
-    if phase2 == "broadcast":
-        joined = pts.join(F.broadcast(cand_sets), "pcell")
-    elif phase2 == "shuffle":
-        # SHUFFLE_HASH: one exchange per side on pcell, hash table built
-        # from the (small-per-partition) candidate sets — no sort-merge
-        # sort over the points.
-        joined = pts.join(cand_sets.hint("shuffle_hash"), "pcell")
-    elif phase2 == "aqe":
-        # The hint PINS shuffle-hash (strategy hints precede size-based
-        # selection, including at AQE re-planning — no broadcast upgrade
-        # will happen). Deliberate: unhinted, the static planner falls
-        # back to SortMergeJoin (cand_sets is an aggregate with no
-        # usable stats) and the worst case sorts the 10^12-row points
-        # side; pinned, the worst case is the intended shuffle-hash plan
-        # and the best case loses only the network fetch of an
-        # already-written shuffle. See the docstring trade-off.
-        joined = pts.join(cand_sets.hint("shuffle_hash"), "pcell")
-    elif phase2 == "salted":
-        from osm_spark.pipeline.salting import key_salt_plan, salted_equi_join
-
-        if salts is None:
-            salts = key_salt_plan(pts, "pcell")
-        joined = salted_equi_join(pts, cand_sets, "pcell", salts, "url")
-    else:
-        raise ValueError(f"unknown knn_join phase2 strategy: {phase2!r}")
+    est = None if n_cells is None else n_cells * (k + _CAND_SLACK) * _CAND_STRUCT_BYTES
+    joined = salting.keyed_join(
+        pts, cand_sets, "pcell", phase2, est_bytes=est, salts=salts,
+        scatter="url", label="knn_join phase2",
+    )
     scored = joined.withColumn(
         "topk",
         F.slice(

@@ -18,8 +18,8 @@ Plan shape (filter-and-refine, same family as ``knn_join``):
    cell id and keep exact ``haversine_m ≤ R``. The 10^12-row side is
    touched by ONE hash join on the cell id: broadcast while the
    candidate table fits (points never shuffle), shuffle-hash on the cell
-   id past the ceiling — the same estimate-driven auto-strategy as
-   ``pip_join`` / ``knn_join(phase2=...)``.
+   id past the ceiling — ``salting.keyed_join``, the form every
+   cell-keyed join outside PIP takes.
 
 Coverage guarantee (why the K-disk is sufficient): a point within R
 meters of a node is within ``deg = R / (DEG_M · cos(|lat|+margin)) ·
@@ -49,7 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo.hexgrid import edge_deg, hex_cell_expr, hex_disk_expr
-from osm_spark.geo.knn import DEG_M, PHASE2_BROADCAST_MAX_BYTES, haversine_m
+from osm_spark.geo.knn import DEG_M, haversine_m
+from osm_spark.pipeline.salting import keyed_join
 
 _CAND_ROW_BYTES = 32  # cell id + node id + 2 doubles
 
@@ -81,14 +82,6 @@ def plan_res(radius_m: float, max_abs_lat_deg: float, max_ring: int = 4) -> int:
     return 0
 
 
-def radius_strategy(n_nodes: int, ring: int) -> str:
-    """Broadcast vs shuffle from a node-count estimate (catalog stat) —
-    the candidate table is |nodes| × disk(ring) rows."""
-    disk = 3 * ring * (ring + 1) + 1
-    est = n_nodes * disk * _CAND_ROW_BYTES
-    return "broadcast" if est <= PHASE2_BROADCAST_MAX_BYTES else "shuffle"
-
-
 def radius_join(
     points: DataFrame,
     nodes: DataFrame,
@@ -109,11 +102,12 @@ def radius_join(
     scalar aggregate over the *node* table (the small dim — the same
     single-scalar precedent as ``pip_join``'s strategy estimate; any
     matching point is within the ring margin of some node, so the node
-    bound covers the pair). ``n_nodes`` feeds the auto strategy; without
-    any stat the join is PINNED shuffle-hash — the same trade-off as
-    ``knn_join(phase2='aqe')``: unhinted, the static planner falls back
-    to SortMergeJoin (the Generate output has no usable stats) and the
-    worst case sorts the 10^12-row points side.
+    bound covers the pair). ``strategy`` is 'broadcast', 'shuffle',
+    'salted' or 'auto' (``salting.keyed_join``). ``n_nodes`` feeds the
+    auto strategy (candidate table ≈ ``n_nodes`` × disk(ring) × 32 B);
+    without it the join is PINNED shuffle-hash — unhinted, the static
+    planner falls back to SortMergeJoin (the Generate output has no
+    usable stats) and the worst case sorts the 10^12-row points side.
 
     ``strategy='salted'`` adds explicit hot-cell splitting to the
     shuffle plan (pipeline/salting.py, the PIP scatter/replicate shape
@@ -166,20 +160,12 @@ def radius_join(
     )
     pts = points.withColumn("pcell", hex_cell_expr("lat", "lon", res))
 
-    if strategy == "auto":
-        strategy = radius_strategy(n_nodes, ring) if n_nodes is not None else "aqe"
-    if strategy in ("shuffle", "aqe"):
-        joined = pts.join(cand.hint("shuffle_hash"), "pcell")
-    elif strategy == "broadcast":
-        joined = pts.join(F.broadcast(cand), "pcell")
-    elif strategy == "salted":
-        from osm_spark.pipeline.salting import key_salt_plan, salted_equi_join
-
-        if salts is None:
-            salts = key_salt_plan(pts, "pcell")
-        joined = salted_equi_join(pts, cand, "pcell", salts, "url")
-    else:
-        raise ValueError(f"unknown radius_join strategy: {strategy!r}")
+    disk = 3 * ring * (ring + 1) + 1
+    est = None if n_nodes is None else n_nodes * disk * _CAND_ROW_BYTES
+    joined = keyed_join(
+        pts, cand, "pcell", strategy, est_bytes=est, salts=salts,
+        scatter="url", label="radius_join",
+    )
 
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("nlat"), F.col("nlon"))
     return (

@@ -30,10 +30,10 @@ Plan shape (filter-and-refine, the engine's standard candidate pattern):
    padded by half the sample gap (the sample quantization) — the same
    coverage proof as radius_join with "node" = nearest sample.
 3. **Refine** — points equi-join candidates on their own cell (ONE hash
-   join touching the 10^12-row side; broadcast under the ceiling, else
-   shuffle-hash on the cell id), keep pairs with dist ≤ radius, then
-   ``min(struct(dist, way_id, seg_idx))`` per point — an aggregate, not
-   a window, so the big side never sorts. Ties (equidistant segments)
+   join touching the 10^12-row side, ``salting.keyed_join``; broadcast
+   under the ceiling, else shuffle-hash on the cell id), keep pairs
+   with dist ≤ radius, then ``min(struct(dist, way_id, seg_idx))`` per
+   point — an aggregate, not a window, so the big side never sorts. Ties (equidistant segments)
    break deterministically on (way_id, seg_idx).
 
 Candidate volume is |segments| × samples × disk — independent of the
@@ -48,8 +48,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo.hexgrid import edge_deg, hex_cell_expr, hex_disk_expr
-from osm_spark.geo.knn import DEG_M, PHASE2_BROADCAST_MAX_BYTES
+from osm_spark.geo.knn import DEG_M
 from osm_spark.geo.radius import plan_ring
+from osm_spark.pipeline.salting import keyed_join
 
 _CAND_ROW_BYTES = 56  # cell + way_id + seg_idx + 4 doubles
 
@@ -107,19 +108,6 @@ def plan_snap(radius_m: float, max_abs_lat: float, max_ring: int = 4) -> tuple[i
     return 1, plan_ring(radius_m + 0.5 * edge_deg(1) * DEG_M, 1, max_abs_lat)
 
 
-def snap_strategy(n_segments: int, res: int, ring: int, radius_m: float) -> str:
-    """Broadcast vs shuffle from a segment-count estimate: candidates ≈
-    segments × (avg samples) × disk. Samples per segment are unknown
-    without scanning; bound by the radius-to-edge ratio + 2 (short urban
-    segments dominate real data; the bound errs toward shuffle — the
-    safe direction at scale)."""
-    e_m = edge_deg(res) * DEG_M
-    samples = max(2.0, radius_m / e_m + 2.0)
-    disk = 3 * ring * (ring + 1) + 1
-    est = n_segments * samples * disk * _CAND_ROW_BYTES
-    return "broadcast" if est <= PHASE2_BROADCAST_MAX_BYTES else "shuffle"
-
-
 def snap_candidates(
     points: DataFrame,
     ways: DataFrame,
@@ -154,6 +142,14 @@ def snap_candidates(
     join; matched rows are identical to the inner form). Streaming map
     matching needs this so a trip-final marker ping survives the
     candidate attach even when it snaps to nothing.
+
+    ``strategy`` is 'broadcast', 'shuffle', 'salted' or 'auto'
+    (``salting.keyed_join``). The auto estimate is candidates ≈
+    segments × samples × disk × 56 B; samples per segment are unknown
+    without scanning, so they are bounded by the radius-to-edge ratio +
+    2 (short urban segments dominate real data; the bound errs toward
+    shuffle — the safe direction at scale). ``n_segments`` is a catalog
+    stat; when omitted one memoized count runs over the segments.
 
     ``strategy='salted'`` adds explicit hot-cell splitting to the
     shuffle path (``pipeline/salting.py`` — the knn/radius/dbscan
@@ -248,21 +244,18 @@ def snap_candidates(
         "way_id", "seg_idx", "ay", "ax", "by", "bx", F.explode(disk_cells).alias("cell")
     )
 
+    est = None
     if strategy == "auto":
         if n_segments is None:
             n_segments = memoized_count(segs)
-        strategy = snap_strategy(n_segments, res, ring, radius_m)
-    if strategy not in ("broadcast", "shuffle", "salted"):
-        raise ValueError(f"unknown snap_join strategy: {strategy!r}")
+        samples = max(2.0, radius_m / (e * DEG_M) + 2.0)
+        disk = 3 * ring * (ring + 1) + 1
+        est = n_segments * samples * disk * _CAND_ROW_BYTES
     if strategy == "salted" and keep_unmatched:
         raise ValueError(
             "snap_candidates: keep_unmatched requires broadcast/shuffle "
             "(the unmatched re-attach cannot ride the salted join)"
         )
-    if strategy == "broadcast":
-        cand = F.broadcast(cand)
-    elif strategy == "shuffle":
-        cand = cand.hint("shuffle_hash")
 
     p = points.select(
         *point_cols,
@@ -290,36 +283,22 @@ def snap_candidates(
             (F.col("ax") + t * (F.col("bx") - F.col("ax"))).alias("proj_lon"),
         ]
     if keep_unmatched:
-        return (
-            p.join(
-                cand,
-                (p["cell"] == cand["cell"])
-                & (d <= F.lit(float(radius_m))),
-                "left",
-            )
-            .select(*out_cols)
-        )
+        cond = (p["cell"] == cand["cell"]) & (d <= F.lit(float(radius_m)))
+        return keyed_join(
+            p, cand, cond, strategy, est_bytes=est, how="left", label="snap_join"
+        ).select(*out_cols)
     if strategy == "salted":
-        from osm_spark.pipeline.salting import (
-            key_salt_plan,
-            salted_equi_join,
-        )
-
-        pj = p.withColumn(
+        p = p.withColumn(
             "_scatter",
             F.concat_ws(
                 "\x1f", *[F.col(c).cast("string") for c in point_cols]
             ),
         )
-        if salts is None:
-            salts = key_salt_plan(pj, "cell")
-        return (
-            salted_equi_join(pj, cand, "cell", salts, "_scatter")
-            .select(*out_cols)
-            .where(F.col("dist_m") <= F.lit(float(radius_m)))
-        )
     return (
-        p.join(cand, "cell")
+        keyed_join(
+            p, cand, "cell", strategy, est_bytes=est, salts=salts,
+            scatter="_scatter", label="snap_join",
+        )
         .select(*out_cols)
         .where(F.col("dist_m") <= F.lit(float(radius_m)))
     )

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from osm_spark.geo.hexgrid import hex_cell_expr, hex_disk_expr
 from osm_spark.geo.knn import haversine_m
 from osm_spark.geo.radius import plan_res, plan_ring
+from osm_spark.pipeline.salting import keyed_join
 
 __all__ = ["hausdorff_join", "frechet_join"]
 
@@ -89,12 +90,10 @@ def _cand_pairs(
         F.col("_tid").alias("trip_b"),
         F.explode(hex_disk_expr(cell, res, ring)).alias("cell"),
     ).distinct()
-    if salts is not None:
-        from osm_spark.pipeline.salting import salted_equi_join
-
-        cand = salted_equi_join(a_cells, b_cells, "cell", salts, "trip_a")
-    else:
-        cand = a_cells.join(b_cells.hint("shuffle_hash"), "cell")
+    cand = keyed_join(
+        a_cells, b_cells, "cell", "shuffle" if salts is None else "salted",
+        salts=salts, scatter="trip_a",
+    )
     return (
         cand.where(F.col("trip_a") < F.col("trip_b"))
         .select("trip_a", "trip_b")

@@ -23,28 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from osm_spark.functions.urls import url_host
+from osm_spark.pipeline.salting import keyed_join
 
-__all__ = ["apply_url_rules", "rules_strategy"]
+__all__ = ["apply_url_rules"]
 
-# host(string ~40B) + prefix(string ~20B) + bool, struct overhead — the
-# same per-row sizing convention as geo/knn.py's _NODE_ROW_BYTES.
+# host(string ~40B) + prefix(string ~20B) + bool, struct overhead
 _RULE_ROW_BYTES = 72
-RULES_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def rules_strategy(n_rules: int) -> str:
-    """Pick the rule-dim join strategy from a rule-count estimate — the
-    same estimate-driven pattern as ``geo/knn.py``'s
-    ``phase1_strategy``/``phase2_strategy``.  A curated per-host policy
-    table (thousands of hosts) broadcasts; a web-scale robots corpus
-    (millions of hosts × a few rules ≈ GBs) is past any sane broadcast
-    ceiling and hash-joins on host instead (shuffle_hash — the build
-    side is the rule dim, never sort-merge over the page table)."""
-    return (
-        "broadcast"
-        if n_rules * _RULE_ROW_BYTES <= RULES_BROADCAST_MAX_BYTES
-        else "shuffle_hash"
-    )
 
 
 def apply_url_rules(
@@ -59,9 +43,13 @@ def apply_url_rules(
     ``allowed`` (boolean) and ``matched_prefix`` (NULL when no rule
     matched — default allow).  ``rules`` columns: host, prefix, allow.
 
-    ``strategy``: "auto" (default — pick by rule-count estimate via
-    ``rules_strategy``; ``n_rules`` threads a catalog/lineage stat in,
-    else one bounded count runs), "broadcast", or "shuffle_hash".
+    ``strategy``: "broadcast", "shuffle" or "auto" (default) — the rule
+    dim's join form (``salting.keyed_join``). Auto broadcasts while
+    ``n_rules`` × 72 B fits: a curated per-host policy table (thousands
+    of hosts) broadcasts, a web-scale robots corpus (millions of hosts ×
+    a few rules ≈ GBs) hash-joins on host with the rule dim as the build
+    side, never a sort-merge over the page table. ``n_rules`` threads a
+    catalog/lineage stat in, else one memoized count runs.
 
     A URL whose host HAS rules but matches none of their prefixes is
     default-allowed exactly like an unruled host: non-matching rules
@@ -95,19 +83,14 @@ def apply_url_rules(
         F.col("prefix").alias("_prefix"),
         F.col("allow").cast("boolean").alias("_allow"),
     )
-    if strategy == "auto":
+    if strategy == "auto" and n_rules is None:
         from osm_spark.pipeline.stats import memoized_count
 
-        strategy = rules_strategy(
-            n_rules if n_rules is not None else memoized_count(rules)
-        )
-    if strategy == "broadcast":
-        r = F.broadcast(r)
-    elif strategy == "shuffle_hash":
-        r = r.hint("shuffle_hash")
-    else:
-        raise ValueError(f"unknown rules strategy: {strategy!r}")
-    joined = u.join(r, on="_host", how="left")
+        n_rules = memoized_count(rules)
+    est = None if n_rules is None else n_rules * _RULE_ROW_BYTES
+    joined = keyed_join(
+        u, r, "_host", strategy, est_bytes=est, how="left", label="rules"
+    )
     # most-specific rule: longest prefix wins; equal-length tie → allow
     # wins (sort key: (-len, allow DESC) via boolean NOT).  The prefix
     # MATCH test lives here in the aggregate guard: rules that exist for

@@ -1,17 +1,17 @@
-"""Generic data-driven hot-key salting for cell-keyed shuffle joins.
+"""The physical form of every cell-keyed equi-join outside the PIP ladder.
 
-Round 4 proved the pattern on the PIP family (spatial_join.py
-``salt_plan`` + ``attach_polygon_dim``: 1.59× over the AQE-only
-strawman on a 20 %-hot-cell fixture) and the r4 verdict named the
-remaining gap: kNN phase 2, ``radius_join`` and DBSCAN's ``eps_pairs``
-still hash-join on the raw cell id with AQE as the only skew backstop.
-At the 10^12-page design point a Zipf urban cell puts ~20 % of those
-shuffles on one task — AQE's runtime split rebalances shuffle BLOCKS of
-the probe side but cannot re-key the join, so one straggler task still
-owns the hot cell's build+probe work.
+kNN phase 2, ``radius_join``, ``snap_candidates``, DBSCAN's
+``eps_pairs``, the trajectory joins, ``segment_crossings``, the robots
+rule dim and the LM vocab join all end in one choice for their keyed
+join: broadcast the small side, shuffle-hash it, or salt it.
+``keyed_join`` makes that choice from one ceiling
+(``BROADCAST_MAX_BYTES``); each caller supplies only its own size
+statistic as an estimate in bytes.
 
-This module is the shared scatter/replicate machinery those joins reuse
-(the ``attach_polygon_dim`` shape generalized to any equi-key):
+Salting exists because at the 10^12-page design point a Zipf urban cell
+puts ~20 % of a cell-keyed shuffle on one task. AQE's runtime split
+rebalances shuffle BLOCKS of the probe side but cannot re-key the join,
+so one straggler task still owns the hot cell's build+probe work.
 
 - ``key_salt_plan(df, key)`` — per-key split factors from the data's
   own histogram (north_rule: "salt factor must come from data, not
@@ -29,18 +29,12 @@ Cost model: replication multiplies only the HOT keys' small-side rows
 radius/DBSCAN), while the big side — the 10^12-row axis — is never
 replicated, only scattered. Same invariants as the PIP plan.
 
-Deliberate non-consolidation: the PIP family keeps its ORIGINAL
-implementations (``spatial_join.py`` ``salt_plan`` /
-``_prejoin_salted`` / ``attach_polygon_dim``) rather than being
-refactored onto this module. Those paths differ in load-bearing ways
-this generalization does not carry — the two-side way-level vertex
-salt derives WAY split factors from the hot-CELL plan, the adaptive
-ladder salts an exploded multi-level frame, and each shape is
-plan-pinned and skew-benched as written. Re-plumbing the most-tuned
-join in the engine through a generic seam trades measured plans for
-abstraction; if the salt SHAPE ever changes (e.g. the explode form),
-both sites change together — tests/test_salting.py and
-tests/test_plans.py pin the shared invariants on both.
+The PIP family keeps its own ladder (``spatial_join._pip_candidates``):
+it counts covering cells against ``BROADCAST_MAX_CELLS``, the same count
+also drives its vertex attach, and its two-side way-level salt derives
+WAY split factors from the hot-CELL plan — a shape this generic join
+does not carry. tests/test_salting.py and tests/test_plans.py pin the
+shared salt invariants on both.
 """
 
 from __future__ import annotations
@@ -48,7 +42,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["HOT_KEY_TARGET", "key_salt_plan", "salted_equi_join"]
+__all__ = [
+    "BROADCAST_MAX_BYTES",
+    "HOT_KEY_TARGET",
+    "keyed_join",
+    "key_salt_plan",
+    "salted_equi_join",
+]
+
+# Small-side bytes above which a keyed join stops broadcasting: far under
+# Spark's 8 GB broadcast hard ceiling and a sane per-executor memory bite.
+BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 # rows per task a single key may own before it splits — matches the PIP
 # family's HOT_CELL_TARGET (spatial_join.py) so one mental model covers
@@ -110,3 +114,52 @@ def salted_equi_join(
         ).alias("_salt"),
     )
     return b.join(s.hint("shuffle_hash"), [key, "_salt"]).drop("_salt")
+
+
+def keyed_join(
+    big: DataFrame,
+    small: DataFrame,
+    on,
+    strategy: str,
+    *,
+    est_bytes: float | None = None,
+    salts: DataFrame | None = None,
+    scatter: str | None = None,
+    how: str = "inner",
+    label: str = "join",
+) -> DataFrame:
+    """``big`` joined to ``small`` on ``on`` in the physical form
+    ``strategy`` names; results are identical on every form, only the
+    plan differs.
+
+    - ``'broadcast'``: ``small`` broadcasts; ``big`` never shuffles.
+    - ``'shuffle'``: shuffle hash join, ``small`` builds the hash table —
+      one exchange per side, never a sort-merge sort of ``big``.
+    - ``'salted'``: ``salted_equi_join`` on the key ``on`` with
+      ``salts`` (``key_salt_plan(big, on)`` when None) and the big-side
+      row identity ``scatter``. Inner joins with a scatter column only.
+    - ``'auto'``: broadcast when ``est_bytes`` (the caller's estimate of
+      the small side's bytes) is at most ``BROADCAST_MAX_BYTES``, else
+      shuffle. Without an estimate the join is PINNED shuffle-hash:
+      join-strategy hints precede size-based selection in JoinSelection,
+      at static planning AND at AQE re-planning, so the hinted join never
+      upgrades to broadcast. That upgrade is traded away on purpose:
+      unhinted, the static planner picks SortMergeJoin for a small side
+      with no usable stats (an aggregate, a Generate) and the worst case
+      SORTS the 10^12-row big side; hinted, the worst case is the
+      intended shuffle-hash plan.
+
+    An unknown strategy raises ``ValueError`` naming ``label``, the
+    caller's parameter."""
+    if strategy == "auto":
+        fits = est_bytes is not None and est_bytes <= BROADCAST_MAX_BYTES
+        strategy = "broadcast" if fits else "shuffle"
+    if strategy == "broadcast":
+        return big.join(F.broadcast(small), on, how)
+    if strategy == "shuffle":
+        return big.join(small.hint("shuffle_hash"), on, how)
+    if strategy == "salted" and scatter is not None and how == "inner":
+        if salts is None:
+            salts = key_salt_plan(big, on)
+        return salted_equi_join(big, small, on, salts, scatter)
+    raise ValueError(f"unknown {label} strategy: {strategy!r}")

@@ -265,8 +265,8 @@ def attach_polygon_dim(
     keeps the small-dim plan; anything else hash-joins on the polygon id
     with an explicit shuffle_hash hint — the candidate list is skinny
     (ids + one point) and the hint prevents the statless-aggregate →
-    SortMergeJoin fallback that would sort it (same trade-off as
-    ``knn_join(phase2='aqe')``).
+    SortMergeJoin fallback that would sort it (the same trade-off as
+    ``salting.keyed_join``'s stat-less auto).
 
     **The way_id key is its own skew axis** (measured: a dense cell
     under a 40-polygon admin stack re-concentrated the freshly-salted

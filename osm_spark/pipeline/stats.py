@@ -1,9 +1,10 @@
 """Memoized driver-side catalog-stat substitutes.
 
-The engine's auto-strategy pattern (kNN ``phase1_strategy``, robots
-``rules_strategy``, PIP covering estimates) decides a physical plan from
-ONE bounded statistic — in production a catalog/lineage stat read from
-Iceberg metadata, in this sandbox a count job over the (small) dim.
+The engine's auto-strategy pattern (``salting.keyed_join``'s size
+estimates, kNN's phase-1 builder, PIP covering estimates) decides a
+physical plan from ONE bounded statistic — in production a
+catalog/lineage stat read from Iceberg metadata, in this sandbox a count
+job over the (small) dim.
 Re-running that job on every invocation puts the planner inside the
 measured hot path (BENCH r4: the kNN headline regressed 5.27→6.44 s
 because phase-1 auto's node count ran inside the timed loop).

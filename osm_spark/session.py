@@ -14,8 +14,10 @@ correct in both worlds:
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
-import shutil
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -47,18 +49,43 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     marker = "osm_spark_pyfile_added"
     if spark.conf.get(f"spark.{marker}", None) == "true":
         return
-    zip_path = os.path.join("/tmp", "osm_spark_pkg.zip")
-    tmp_path = zip_path + ".tmp"
-    pkg_dir = os.path.join(_REPO_ROOT, "osm_spark")
-    with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
+    spark.sparkContext.addPyFile(package_zip())
+    spark.conf.set(f"spark.{marker}", "true")
+
+
+def package_zip(repo_root: str = _REPO_ROOT, out_dir: str = "/tmp") -> str:
+    """Zip the ``osm_spark`` package under ``repo_root`` into ``out_dir``
+    and return the zip's path.
+
+    The zip is named by a hash of its bytes and written through a unique
+    temp file that ``os.replace`` moves into place, so sessions started
+    at once from two checkouts never share a path: Spark refuses to
+    re-add a file name whose contents changed ("exists and does not
+    match contents"). Entries carry a fixed timestamp, so identical
+    sources give identical bytes and the same path."""
+    buf = io.BytesIO()
+    pkg_dir = os.path.join(repo_root, "osm_spark")
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
             for fn in sorted(files):
                 if fn.endswith(".py"):
                     full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, _REPO_ROOT))
-    shutil.move(tmp_path, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
-    spark.conf.set(f"spark.{marker}", "true")
+                    info = zipfile.ZipInfo(os.path.relpath(full, repo_root))
+                    info.compress_type = zipfile.ZIP_DEFLATED
+                    info.external_attr = 0o644 << 16
+                    with open(full, "rb") as f:
+                        zf.writestr(info, f.read())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    zip_path = os.path.join(out_dir, f"osm_spark_pkg-{digest}.zip")
+    if not os.path.exists(zip_path):
+        fd, tmp_path = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        os.chmod(tmp_path, 0o644)
+        os.replace(tmp_path, zip_path)
+    return zip_path
 
 
 def get_spark(

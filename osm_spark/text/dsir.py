@@ -34,7 +34,7 @@ Scale design (10^12-doc design point)
   corpus size (that is the point of hashed features) — it broadcasts
   unconditionally; there is no vocabulary-sized join anywhere, which
   is what lets DSIR run where an exact-vocabulary LM join would need
-  the shuffle path (lm.py's AUTO_BROADCAST_MAX_VOCAB ceiling).
+  the shuffle path (lm.py's vocab join past the broadcast ceiling).
 - The target corpus is small by definition (the paper's regime:
   Wikipedia/books vs Common Crawl); its distribution build is one
   bounded aggregate. Totals ride as 1-row cross joins, never a

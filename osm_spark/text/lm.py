@@ -36,9 +36,10 @@ Scale design (10^12-doc design point)
   (billions of distinct tokens with URLs/typos) can exceed the
   broadcast ceiling, so the join strategy is explicit: 'broadcast' for
   bounded vocabularies, 'shuffle' (shuffle_hash, build on the vocab
-  side) past it, 'auto' decides from the vocab row count — one cheap
-  count() over the already-combined aggregate, the catalog-statistic
-  analog (same role as pip_join's strategy probe).
+  side) past it, 'auto' broadcasts while vocab rows × 128 B fit
+  ``salting.BROADCAST_MAX_BYTES`` (``salting.keyed_join``). The row
+  count is one memoized count over the already-combined aggregate, the
+  catalog-statistic analog (same role as pip_join's strategy probe).
 - Zipf skew: the head word ("the") concentrates its shuffle key on the
   shuffle path; AQE skew-join splitting handles the probe side, and
   the per-doc re-aggregation is on doc_id, which is uniform.
@@ -49,10 +50,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# vocab rows below this broadcast; above, shuffle_hash (Spark's default
-# autoBroadcastJoinThreshold is byte-based; rows are the honest unit
-# for a two-column dictionary table)
-AUTO_BROADCAST_MAX_VOCAB = 2_000_000
+from osm_spark.pipeline.salting import keyed_join
+
+# a vocab row: the word string + its long count, with row overhead
+_VOCAB_ROW_BYTES = 128
 
 
 def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -84,18 +85,16 @@ def lm_score(
     Documents with zero tokens are absent (their score is undefined);
     left-join from the source table if every row must come back.
     """
-    if vocab_join not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"vocab_join must be auto|broadcast|shuffle, got {vocab_join!r}")
     toks = tokenize(docs, id_col, text_col)
     vocab = train_unigram(toks)
     stats = vocab.agg(
         F.sum("c").alias("total"), F.count("*").alias("v_size")
     )
+    est = None
     if vocab_join == "auto":
-        vocab_join = (
-            "broadcast" if vocab.count() <= AUTO_BROADCAST_MAX_VOCAB else "shuffle"
-        )
-    hinted = F.broadcast(vocab) if vocab_join == "broadcast" else vocab.hint("shuffle_hash")
+        from osm_spark.pipeline.stats import memoized_count
+
+        est = memoized_count(vocab) * _VOCAB_ROW_BYTES
     lw = F.round(
         F.log(
             (F.col("c") + F.lit(1)).cast("double")
@@ -104,7 +103,7 @@ def lm_score(
         * F.lit(1000000.0)
     ).cast("long")
     return (
-        toks.join(hinted, "word")
+        keyed_join(toks, vocab, "word", vocab_join, est_bytes=est, label="vocab_join")
         .crossJoin(stats)
         .select(id_col, lw.alias("lw"))
         .groupBy(id_col)

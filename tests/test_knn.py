@@ -126,27 +126,14 @@ def _phase2_rows(spark, points, **kw):
 
 
 def test_knn_phase2_paths_identical(spark, points):
-    """broadcast / shuffle / AQE-auto phase-2 joins: identical results —
+    """broadcast / shuffle / auto phase-2 joins: identical results —
     the strategy changes the physical plan only."""
     base = _phase2_rows(spark, points, phase2="broadcast")
     assert _phase2_rows(spark, points, phase2="shuffle") == base
-    assert _phase2_rows(spark, points) == base  # auto → AQE runtime choice
+    assert _phase2_rows(spark, points) == base  # auto, no stat → pinned shuffle
     # auto with a catalog cell-count estimate, both regimes
     assert _phase2_rows(spark, points, n_cells=10) == base
     assert _phase2_rows(spark, points, n_cells=10**9) == base
-
-
-def test_knn_phase2_strategy_estimate():
-    from osm_spark.geo.knn import PHASE2_BROADCAST_MAX_BYTES, phase2_strategy
-
-    assert phase2_strategy(10_000, k=3) == "broadcast"
-    # the 10^12-page design point: ~10^7-10^8 occupied land cells →
-    # multi-GB candidate table → must NOT broadcast
-    assert phase2_strategy(50_000_000, k=3) == "shuffle"
-    # threshold is bytes-based, so k moves it
-    edge = PHASE2_BROADCAST_MAX_BYTES // (7 * 24)
-    assert phase2_strategy(edge, k=3) == "broadcast"
-    assert phase2_strategy(edge + 1, k=3) == "shuffle"
 
 
 def test_knn_phase2_plan_shapes(spark, points):
@@ -171,7 +158,7 @@ def test_knn_phase2_plan_shapes(spark, points):
 def test_knn_default_auto_plan_never_sorts_points(spark, points):
     """auto with no catalog stat (the default call) must NOT fall back to
     an unhinted SortMergeJoin — that would sort the 10^12-row points
-    side. The AQE path carries the shuffle_hash hint."""
+    side. The no-stat auto path carries the shuffle_hash hint."""
     nodes = synth_nodes(spark)
     plan = (
         knn_join(points, nodes, k=3)
@@ -183,20 +170,6 @@ def test_knn_default_auto_plan_never_sorts_points(spark, points):
 def test_knn_phase2_rejects_unknown(spark, points):
     with pytest.raises(ValueError):
         knn_join(points, synth_nodes(spark), k=3, phase2="nope").collect()
-
-
-def test_phase1_strategy_threshold():
-    from osm_spark.geo.knn import (
-        PHASE2_BROADCAST_MAX_BYTES,
-        _NODE_ROW_BYTES,
-        phase1_strategy,
-    )
-
-    edge = PHASE2_BROADCAST_MAX_BYTES // _NODE_ROW_BYTES
-    assert phase1_strategy(1000) == "broadcast"
-    assert phase1_strategy(edge) == "broadcast"
-    assert phase1_strategy(edge + 1) == "ring"
-    assert phase1_strategy(100_000_000) == "ring"  # planet amenity scale
 
 
 def test_knn_phase1_auto_equal_both_sides_of_threshold(spark, points):

@@ -66,6 +66,21 @@ def test_lm_score_rejects_bad_strategy(spark):
         lm_score(df, vocab_join="sortmerge")
 
 
+def test_lm_score_auto_probe_is_memoized(spark, count_jobs):
+    """The auto vocab-size probe is a memoized count: a second call over
+    a freshly built, identical frame launches no Spark job."""
+
+    def docs():
+        return spark.sql(
+            "SELECT * FROM VALUES (1, 'memo probe words'), (2, 'probe twice')"
+            " AS t(doc_id, text)"
+        )
+
+    lm_score(docs())
+    _, jobs = count_jobs(lambda: lm_score(docs()))
+    assert jobs == 0
+
+
 def test_train_unigram_counts(spark):
     df = spark.createDataFrame([(1, "a b a"), (2, "b")], "doc_id long, text string")
     got = {r.word: r.c for r in train_unigram(tokenize(df)).collect()}

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_spark.geo.knn import haversine_m_py
-from osm_spark.geo.radius import plan_res, plan_ring, radius_join, radius_strategy
+from osm_spark.geo.radius import plan_res, plan_ring, radius_join
 
 
 def _fixture(spark, seed=7, n_pts=400, n_nodes=60, centers=((51.5, -0.13), (64.15, -21.94))):
@@ -54,8 +54,7 @@ def test_radius_join_paths_identical(spark):
     kw = dict(radius_m=2000.0, max_abs_lat=65.0)
     b = {(r.url, r.node_id) for r in radius_join(pdf, ndf, strategy="broadcast", **kw).collect()}
     s = {(r.url, r.node_id) for r in radius_join(pdf, ndf, strategy="shuffle", **kw).collect()}
-    a = {(r.url, r.node_id) for r in radius_join(pdf, ndf, strategy="aqe", **kw).collect()}
-    assert b == s == a == _brute(pts, nodes, 2000.0)
+    assert b == s == _brute(pts, nodes, 2000.0)
 
 
 def test_radius_join_explicit_res_still_exact(spark):
@@ -77,12 +76,6 @@ def test_plan_ring_and_res():
         assert plan_ring(radius, res, 65.0) <= 4
     # equator needs fewer/equal cells than the arctic for the same radius
     assert plan_ring(1500.0, 8, 0.0) <= plan_ring(1500.0, 8, 64.0)
-
-
-def test_radius_strategy_thresholds():
-    assert radius_strategy(1000, 3) == "broadcast"
-    # planet-scale node table: disk-exploded candidates blow the ceiling
-    assert radius_strategy(500_000_000, 3) == "shuffle"
 
 
 def test_radius_join_plans(spark):

@@ -3,11 +3,8 @@ allow-wins ties, default allow, path extraction edges."""
 
 from __future__ import annotations
 
-from osm_spark.pipeline.robots import (
-    RULES_BROADCAST_MAX_BYTES,
-    apply_url_rules,
-    rules_strategy,
-)
+from osm_spark.pipeline.robots import apply_url_rules
+from osm_spark.pipeline.salting import BROADCAST_MAX_BYTES
 
 RULES = [
     ("a.com", "/", False),          # deny all...
@@ -51,13 +48,6 @@ def test_rule_semantics(spark):
     assert len(got) == len(URLS)
 
 
-def test_rules_strategy_thresholds():
-    assert rules_strategy(1000) == "broadcast"
-    assert (
-        rules_strategy(RULES_BROADCAST_MAX_BYTES) == "shuffle_hash"
-    )  # 72 B/row estimate puts this far past the ceiling
-
-
 def test_rules_join_is_broadcast(spark):
     u = spark.createDataFrame(URLS, "id int, url string")
     r = spark.createDataFrame(RULES, "host string, prefix string, allow boolean")
@@ -73,7 +63,7 @@ def test_rules_join_shuffles_past_ceiling(spark):
     no BroadcastExchange, no SortMergeJoin over the page table."""
     u = spark.createDataFrame(URLS, "id int, url string")
     r = spark.createDataFrame(RULES, "host string, prefix string, allow boolean")
-    big = RULES_BROADCAST_MAX_BYTES  # rule-count stat past the ceiling
+    big = BROADCAST_MAX_BYTES  # rule-count stat past the ceiling
     out = apply_url_rules(u, r, n_rules=big)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan

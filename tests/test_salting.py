@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from osm_spark.geo.dbscan import eps_pairs
 from osm_spark.geo.hexgrid import hex_cell_expr
 from osm_spark.geo.knn import knn_join
-from osm_spark.geo.radius import plan_res, radius_join
+from osm_spark.geo.radius import plan_res, plan_ring, radius_join
+from osm_spark.pipeline import salting
 from osm_spark.pipeline.salting import key_salt_plan, salted_equi_join
 
 
@@ -158,7 +159,7 @@ def test_salted_join_never_broadcasts_candidate_sets(spark):
     that grows with the occupied-cell count — multi-GB at planet
     scale) must reach the join through the salted shuffle, never a
     BroadcastExchange. Phase 1's small node-dim broadcast is separate
-    and allowed while the dim fits (phase1_strategy)."""
+    and allowed while the dim fits (phase1='auto')."""
     pts = _cloud(spark)
     nodes = _nodes(spark)
     cells = pts.select(hex_cell_expr("lat", "lon", 8).alias("pcell"))
@@ -234,3 +235,112 @@ def test_snap_salted_rejects_keep_unmatched(spark):
             pts, ways, 2000.0, strategy="salted", keep_unmatched=True,
             point_cols=("trip_id", "seq"),
         )
+
+
+# The broadcast ceiling every keyed join had before it moved into
+# salting.py; each op's edge stat below is computed from it with the op's
+# own row-size estimate, so a drift in either moves an edge and fails.
+_CEILING = 256 * 1024 * 1024
+
+
+def _join_form(df):
+    plan = _plan(df)
+    if "LeftAnti" in plan:  # kNN phase 1's ring builder
+        return "ring"
+    bhj, shj = "BroadcastHashJoin" in plan, "ShuffledHashJoin" in plan
+    assert bhj != shj, plan
+    return "broadcast" if bhj else "shuffle"
+
+
+def _edge_cases(spark):
+    """op -> (build(stat) -> DataFrame, edge stat, form past the edge)."""
+    from osm_spark.geo.hexgrid import edge_deg
+    from osm_spark.geo.knn import DEG_M
+    from osm_spark.geo.snap import plan_snap, snap_join
+    from osm_spark.pipeline.robots import apply_url_rules
+
+    pts, nodes = _cloud(spark, n=60), _nodes(spark, n=12)
+    lat = 52.0
+    rres = plan_res(1000.0, lat)
+    rring = plan_ring(1000.0, rres, lat)
+    sres, sring = plan_snap(800.0, lat)
+    seg_bytes = (
+        max(2.0, 800.0 / (edge_deg(sres) * DEG_M) + 2.0)
+        * (3 * sring * (sring + 1) + 1)
+        * 56
+    )
+    snap_edge = int(_CEILING // seg_bytes)
+    while (snap_edge + 1) * seg_bytes <= _CEILING:
+        snap_edge += 1
+    while snap_edge * seg_bytes > _CEILING:
+        snap_edge -= 1
+    ways = spark.createDataFrame(
+        [(1, [51.49, 51.51], [-0.14, -0.10])],
+        "way_id long, vlat array<double>, vlon array<double>",
+    )
+    urls = spark.createDataFrame([(1, "http://a.com/x")], "id int, url string")
+    rules = spark.createDataFrame(
+        [("a.com", "/", False)], "host string, prefix string, allow boolean"
+    )
+    return {
+        "knn_phase1": (
+            lambda s: knn_join(pts, nodes, k=3, phase2="broadcast", n_nodes=s),
+            _CEILING // 24,
+            "ring",
+        ),
+        "knn_phase2": (
+            lambda s: knn_join(pts, nodes, k=3, phase1="broadcast", n_cells=s),
+            _CEILING // ((3 + 4) * 24),
+            "shuffle",
+        ),
+        "radius": (
+            lambda s: radius_join(pts, nodes, 1000.0, max_abs_lat=lat, n_nodes=s),
+            _CEILING // ((3 * rring * (rring + 1) + 1) * 32),
+            "shuffle",
+        ),
+        "snap": (
+            lambda s: snap_join(pts, ways, 800.0, max_abs_lat=lat, n_segments=s),
+            snap_edge,
+            "shuffle",
+        ),
+        "robots": (
+            lambda s: apply_url_rules(urls, rules, n_rules=s),
+            _CEILING // 72,
+            "shuffle",
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["knn_phase1", "knn_phase2", "radius", "snap", "robots", "lm"]
+)
+def test_broadcast_edge_moves_every_op(spark, monkeypatch, op):
+    """Every keyed join broadcasts at its edge stat and stops one past
+    it, through its public entry point and without collecting; halving
+    ``salting.BROADCAST_MAX_BYTES`` — the one ceiling — moves each edge."""
+    if op == "lm":
+        from osm_spark.text.lm import lm_score, tokenize, train_unigram
+
+        docs = spark.createDataFrame(
+            [(1, "a b c a"), (2, "b d")], "doc_id long, text string"
+        )
+        vocab = train_unigram(tokenize(docs)).count()
+        monkeypatch.setattr(salting, "BROADCAST_MAX_BYTES", vocab * 128)
+        assert _join_form(lm_score(docs)) == "broadcast"
+        monkeypatch.setattr(salting, "BROADCAST_MAX_BYTES", vocab * 128 - 1)
+        assert _join_form(lm_score(docs)) == "shuffle"
+        return
+    build, edge, past = _edge_cases(spark)[op]
+    assert _join_form(build(edge)) == "broadcast"
+    assert _join_form(build(edge + 1)) == past
+    monkeypatch.setattr(salting, "BROADCAST_MAX_BYTES", _CEILING // 2)
+    assert _join_form(build(edge)) == past
+
+
+def test_aqe_strategy_is_gone(spark):
+    """'aqe' built exactly the 'shuffle' plan; it is no longer accepted."""
+    pts, nodes = _cloud(spark, n=20), _nodes(spark, n=5)
+    with pytest.raises(ValueError, match="phase2"):
+        knn_join(pts, nodes, k=3, phase1="broadcast", phase2="aqe")
+    with pytest.raises(ValueError, match="radius_join"):
+        radius_join(pts, nodes, 1000.0, max_abs_lat=52.0, strategy="aqe")

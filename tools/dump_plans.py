@@ -89,7 +89,7 @@ def main() -> None:
             "Phase 1 ranks nodes per occupied cell; phase 2 broadcasts the "
             "per-cell candidate arrays and computes top-k with narrow Column "
             "ops — the pages side never shuffles. This is the plan "
-            "phase2_strategy picks while the candidate table fits the "
+            "phase-2 auto picks while the candidate table fits the "
             "broadcast ceiling; the stat-less default pins shuffle-hash "
             "instead (next section).",
             knn_join(points, synth_nodes(spark), k=3, phase2="broadcast"),
@@ -99,7 +99,7 @@ def main() -> None:
             "Same candidate-set semantics, but points hash-join the "
             "per-cell candidate arrays on the cell id (SHUFFLE_HASH) — "
             "one exchange of the points side, no window over it; chosen "
-            "by phase2_strategy when the occupied-cell table would "
+            "by phase-2 auto when the occupied-cell table would "
             "exceed the broadcast ceiling.",
             knn_join(points, synth_nodes(spark), k=3, phase2="shuffle"),
         ),
